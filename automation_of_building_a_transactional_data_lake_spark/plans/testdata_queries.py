@@ -39,6 +39,7 @@ from ..operators.cdc import dedupe_latest
 from ..operators.similarity import cosine_similarity_col
 from ..operators.textstats import with_token_stats
 from ..spec import OP_DELETE
+from .demo_fixture import demo_root
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -2183,9 +2184,13 @@ FROM (
 # user_data: unpartitioned, Op mix I/U/D = 46/52/2.
 # item_data: hive-partitioned by category (partition-pruned merge with
 # hard-link carry-forward), 13 in-batch duplicate keys (dedup tie-break).
+# The raw zone is the reference's demo data where it is checked out,
+# else the seeded FIXTURES.md zone (plans/demo_fixture.py). Resolved
+# once at import: the Spark side and the oracle SQL built below must
+# read the same directory.
 # --------------------------------------------------------------------------
 
-_DEMO_ROOT = "/root/reference/demo_data"
+_DEMO_ROOT = demo_root()
 
 
 def _game_cdc_final_state(spark: SparkSession, table: str, out_cols: list[str]) -> DataFrame:

@@ -19,12 +19,13 @@ from automation_of_building_a_transactional_data_lake_spark.operators.multimodal
     sample_frames,
 )
 from automation_of_building_a_transactional_data_lake_spark.pipeline import initial_load
+from automation_of_building_a_transactional_data_lake_spark.plans.demo_fixture import demo_root
 from automation_of_building_a_transactional_data_lake_spark.spec import GAME_SPECS_BY_NAME
 from automation_of_building_a_transactional_data_lake_spark.streaming.microbatch import (
     cdc_stream_available_now,
 )
 
-DEMO = "/root/reference/demo_data"
+DEMO = demo_root()
 
 
 # -- dates (SF5/SF7) ---------------------------------------------------------

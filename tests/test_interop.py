@@ -2342,6 +2342,9 @@ def test_reference_delta_cdc_pipeline_on_real_delta_table(spark, tmp_path):
         dedupe_latest,
         with_audit_column,
     )
+    from automation_of_building_a_transactional_data_lake_spark.plans.demo_fixture import (
+        demo_root,
+    )
     from automation_of_building_a_transactional_data_lake_spark.plans.testdata_queries import (
         QUERIES,
     )
@@ -2351,7 +2354,7 @@ def test_reference_delta_cdc_pipeline_on_real_delta_table(spark, tmp_path):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     initial = spark.read.option("recursiveFileLookup", "true").parquet(
-        "/root/reference/demo_data/initial-load/game/user_data"
+        f"{demo_root()}/initial-load/game/user_data"
     )
     # The audit column exists from creation so merges match the schema.
     initial = initial.withColumn(
@@ -2369,7 +2372,7 @@ def test_reference_delta_cdc_pipeline_on_real_delta_table(spark, tmp_path):
         f.write(json.dumps({"metaData": meta}) + "\n")
 
     batch = spark.read.parquet(
-        "/root/reference/demo_data/cdc-load/game/user_data"
+        f"{demo_root()}/cdc-load/game/user_data"
     )
     deduped = dedupe_latest(
         cast_envelope_timestamp(batch), key="user_id", ts_col="timestamp",

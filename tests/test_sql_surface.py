@@ -16,13 +16,14 @@ from automation_of_building_a_transactional_data_lake_spark.pipeline import (
     cdc_load,
     initial_load,
 )
+from automation_of_building_a_transactional_data_lake_spark.plans.demo_fixture import demo_root
 from automation_of_building_a_transactional_data_lake_spark.spec import (
     GAME_SPECS_BY_NAME,
     TableSpec,
 )
 from automation_of_building_a_transactional_data_lake_spark.sql import LakeSQL, MergeResult
 
-DEMO = "/root/reference/demo_data"
+DEMO = demo_root()
 
 
 @pytest.fixture()

@@ -23,10 +23,11 @@ from automation_of_building_a_transactional_data_lake_spark.pipeline import (
     cdc_load_all,
     initial_load_all,
 )
+from automation_of_building_a_transactional_data_lake_spark.plans.demo_fixture import demo_root
 from automation_of_building_a_transactional_data_lake_spark.sources.ledger import FileLedger
 from automation_of_building_a_transactional_data_lake_spark.spec import GAME_SPECS, TableSpec
 
-DEMO = "/root/reference/demo_data"
+DEMO = demo_root()
 CLOCK = datetime(2023, 9, 1, tzinfo=timezone.utc)
 
 SPEC_PLAIN = TableSpec("t_plain", "id", None, None, "testdb")
