@@ -43,8 +43,13 @@ def with_session_id(
     # windows) and re-run the date/hour/minute/second arithmetic per
     # reference. Lagging the long instead is arithmetically identical
     # (epoch_micros is monotone and null-preserving) and lags once
-    # (r18, guide §1.2 per-task work).
+    # (r18, guide §1.2 per-task work). The helper column takes a name
+    # the input lacks (Spark resolves names case-insensitively), so a
+    # caller's own ``__sess_us`` is neither overwritten nor dropped.
+    taken = {c.lower() for c in df.columns}
     us = "__sess_us"
+    while us in taken:
+        us = "_" + us
     d = df.withColumn(us, epoch_micros(F.col(time_col), ntz))
     gap_us = F.col(us) - F.lag(us).over(w)
     is_start = F.when(

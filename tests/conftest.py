@@ -71,7 +71,31 @@ _DEFAULT_LANE_KEEP = {
 }
 
 
+def _unmatched_lane_keep(items) -> list[str]:
+    """`_DEFAULT_LANE_KEEP` entries naming a test their collected file
+    does not define. A renamed or removed pin would otherwise match
+    nothing and quietly move to the deep lane; the check looks the name
+    up in the module, so ``-k`` and node-id selections pass."""
+    modules = {
+        os.path.basename(str(i.fspath)): i.module
+        for i in items
+        if getattr(i, "module", None) is not None
+    }
+    unmatched = []
+    for entry in sorted(_DEFAULT_LANE_KEEP):
+        fname, name = entry.split("::")
+        if fname in modules and not hasattr(modules[fname], name):
+            unmatched.append(entry)
+    return unmatched
+
+
 def pytest_collection_modifyitems(config, items):
+    unmatched = _unmatched_lane_keep(items)
+    if unmatched:
+        raise pytest.UsageError(
+            f"_DEFAULT_LANE_KEEP entries match no test: {unmatched}; "
+            "update tests/conftest.py with the pin's new name"
+        )
     if os.environ.get("TDL_DEEP_TESTS", "0") == "1":
         return
     skip = pytest.mark.skip(

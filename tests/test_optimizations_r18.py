@@ -69,8 +69,13 @@ def test_spread_width_decision(spark):
         _spread,
     )
 
+    # Sized from the host's parallelism so both branches hold on any
+    # core count: ~250 rows (~16 KB) per core keeps the one file far
+    # below the 4 MB open cost (one split by default), and the
+    # maxPartitionBytes below cuts it into >= 2x parallelism splits.
+    par = spark.sparkContext.defaultParallelism
     tmp = tempfile.mkdtemp(prefix="tdl_spread_")
-    spark.range(2000).select(
+    spark.range(250 * max(8, par)).select(
         F.col("id").alias("vec_id"),
         F.array(*[F.rand(i) for i in range(8)]).alias("embedding"),
     ).coalesce(1).write.parquet(os.path.join(tmp, "one"))
@@ -80,7 +85,12 @@ def test_spread_width_decision(spark):
 
     # Same file, split into >= defaultParallelism scan partitions: the
     # estimate must say "already wide" and skip the repartition.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024))
+    size = sum(
+        os.path.getsize(os.path.join(tmp, "one", f))
+        for f in os.listdir(os.path.join(tmp, "one"))
+        if f.endswith(".parquet")
+    )
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(size // (2 * par)))
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
     try:
         wide = spark.read.parquet(os.path.join(tmp, "one"))

@@ -145,3 +145,28 @@ def test_epoch_micros_ntz_dst_safe(spark):
     us, sess = results["UTC"]
     assert us[1] - us[0] == 62 * 60 * 1_000_000  # true wall-clock gap
     assert sess == [(1, 0), (1, 1)]  # 62 min > 30 min gap: two sessions
+
+
+def test_with_session_id_keeps_a_caller_column_named_like_its_helper(spark):
+    """with_session_id's epoch-micros helper column must not collide
+    with an input column: a caller's own ``__sess_us`` (and a
+    case-variant of the next candidate name) survive untouched, and the
+    sessions still split on the real timestamps."""
+    from automation_of_building_a_transactional_data_lake_spark.operators.sessionize import (
+        with_session_id,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, "2024-01-01 00:00:00", -1, "a"),
+            (1, "2024-01-01 00:10:00", -2, "b"),
+            (1, "2024-01-01 02:00:00", -3, "c"),
+        ],
+        "user_id long, w string, __sess_us long, ___SESS_US string",
+    ).withColumn("ts", F.col("w").cast("timestamp")).drop("w")
+    out = with_session_id(df, gap_seconds=1800)
+    assert out.columns == df.columns + ["session_id"]
+    got = sorted(
+        (r["__sess_us"], r["___SESS_US"], r["session_id"]) for r in out.collect()
+    )
+    assert got == [(-3, "c", 1), (-2, "b", 0), (-1, "a", 0)]
