@@ -68,6 +68,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .atomic import create_file, replace_file
+
 _DELTA_LOG = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
 
@@ -590,29 +592,11 @@ def add_delta_constraint(
             set(proto["writerFeatures"]) | {"checkConstraints"}
         )
         actions.append({"protocol": proto})
-    ts = int(time.time() * 1000)
     actions.append({"metaData": new_meta})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name.lower(), "expr": expr},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    return _delta_commit(
+        table_path, state["version"] + 1, actions, "ADD CONSTRAINT",
+        {"name": name.lower(), "expr": expr},
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(table_path, _DELTA_LOG, f"{next_version:020d}.json")
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 def drop_delta_constraint(table_path: str, name: str) -> int:
@@ -628,29 +612,10 @@ def drop_delta_constraint(table_path: str, name: str) -> int:
     del conf[key]
     new_meta = dict(meta)
     new_meta["configuration"] = conf
-    ts = int(time.time() * 1000)
-    actions = [
-        {"metaData": new_meta},
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name.lower()},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        },
-    ]
-    next_version = state["version"] + 1
-    log_path = os.path.join(table_path, _DELTA_LOG, f"{next_version:020d}.json")
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
+    return _delta_commit(
+        table_path, state["version"] + 1, [{"metaData": new_meta}],
+        "DROP CONSTRAINT", {"name": name.lower()},
+    )
 
 
 def _norm_pv(pv) -> dict:
@@ -1005,10 +970,7 @@ def _delta_write_dvs(
             "sizeInBytes": len(blob),
             "cardinality": len(set(dv_positions[log_path])),
         }
-    tmp = os.path.join(table_path, f".{fname}.tmp")
-    with open(tmp, "wb") as f:
-        f.write(bytes(buf))
-    os.replace(tmp, os.path.join(table_path, fname))
+    replace_file(os.path.join(table_path, fname), bytes(buf))
     return descriptors
 
 
@@ -1314,14 +1276,42 @@ def _delta_write_checkpoint(table_path: str, version: int | None = None) -> str 
     ckpt_path = os.path.join(log_dir, f"{v:020d}.checkpoint.parquet")
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), ckpt_path)
     # _last_checkpoint LAST: readers that see it must find the file.
-    with open(os.path.join(log_dir, _LAST_CHECKPOINT), "w", encoding="utf-8") as f:
-        json.dump({"version": v, "size": len(rows)}, f)
+    replace_file(
+        os.path.join(log_dir, _LAST_CHECKPOINT),
+        json.dumps({"version": v, "size": len(rows)}),
+    )
     return ckpt_path
 
 
 def _delta_maybe_checkpoint(table_path: str, version: int) -> None:
     if version > 0 and version % _DELTA_CHECKPOINT_INTERVAL == 0:
         _delta_write_checkpoint(table_path, version)
+
+
+def _delta_commit(
+    table_path: str,
+    version: int,
+    actions: list[dict],
+    operation: str,
+    params: dict,
+) -> int:
+    """Commit ``actions`` as log entry ``version`` with this engine's
+    ``commitInfo`` last, writing the checkpoint when one is due.
+    Returns ``version``. The entry is published put-if-absent: when a
+    rival already took ``version`` this raises ``FileExistsError`` and
+    nothing of this commit is visible."""
+    info = {
+        "timestamp": int(time.time() * 1000),
+        "operation": operation,
+        "operationParameters": params,
+        "engineInfo": "transactional-data-lake-spark interop",
+    }
+    create_file(
+        os.path.join(table_path, _DELTA_LOG, f"{version:020d}.json"),
+        "".join(json.dumps(a) + "\n" for a in [*actions, {"commitInfo": info}]),
+    )
+    _delta_maybe_checkpoint(table_path, version)
+    return version
 
 
 def _delta_replay(table_path: str, version: int | None) -> dict:
@@ -2305,9 +2295,11 @@ def write_delta(
     ``{"delta.enableChangeDataFeed": "true"}`` — which also raises the
     commit's writer protocol to 4 per spec); altering an existing
     table's properties is refused.
-    Single-writer: the commit is an O_EXCL create of the next version's
-    log file, so two engine-native writers cannot clobber each other,
-    but no conflict resolution is attempted against foreign writers."""
+    Single-writer: the commit publishes the next version's log file
+    put-if-absent (``formats/atomic.create_file``), so two engine-native
+    writers cannot clobber each other and a crash never leaves a torn
+    entry, but no conflict resolution is attempted against foreign
+    writers."""
     if mode not in ("error", "overwrite", "append"):
         raise ValueError(f"mode must be error|overwrite|append, got {mode!r}")
     partition_by = list(partition_by or [])
@@ -2423,20 +2415,11 @@ def write_delta(
 
     adds = _delta_stage_files(df, table_path, partition_by)
     actions.extend({"add": a} for a in adds)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
-    )
     while True:
-        log_path = os.path.join(log_dir, f"{next_version:020d}.json")
         try:
-            fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            return _delta_commit(
+                table_path, next_version, actions, "WRITE", {"mode": mode}
+            )
         except FileExistsError:
             # Another writer took this version. AddFile-only commits
             # never conflict under Delta's own OCC rules (nothing we
@@ -2483,16 +2466,6 @@ def write_delta(
                     a for a in actions
                     if "protocol" not in a and "metaData" not in a
                 ]
-            continue
-        break
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 # -- Delta Lake: keyed MERGE (upsert / delete) on a foreign table -----------
@@ -3002,32 +2975,10 @@ def merge_delta(
             if return_stats
             else state["version"]
         )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "mode": mode,
-                    "key": key,
-                    "strategy": strategy,
-                },
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    next_version = _delta_commit(
+        table_path, state["version"] + 1, actions, "MERGE",
+        {"mode": mode, "key": key, "strategy": strategy},
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
-    )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
     return (
         (next_version, {"matched": matched_n})
         if return_stats
@@ -3116,27 +3067,9 @@ def compact_delta(spark: SparkSession, table_path: str) -> int | None:
     for a in _delta_stage_files(survivors, table_path, cm_pcols):
         a["dataChange"] = False
         actions.append({"add": a})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "REORG",
-                "operationParameters": {"applyPurge": True},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    return _delta_commit(
+        table_path, state["version"] + 1, actions, "REORG", {"applyPurge": True}
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(table_path, _DELTA_LOG, f"{next_version:020d}.json")
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 def _delta_rewrite_where(
@@ -3387,27 +3320,10 @@ def _delta_rewrite_where(
         actions.extend(
             {"cdc": c} for c in _delta_stage_cdc(cdc_df, table_path, cm_pcols)
         )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": operation,
-                "operationParameters": opp,
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    version = _delta_commit(
+        table_path, state["version"] + 1, actions, operation, opp
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(table_path, _DELTA_LOG, f"{next_version:020d}.json")
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version, n_aff
+    return version, n_aff
 
 
 def delete_delta_where(
@@ -3500,29 +3416,10 @@ def restore_delta(table_path: str, version: int) -> int:
         actions.append({"add": add})
     if not actions:
         return cur["version"]  # same file set: no-op
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "RESTORE",
-                "operationParameters": {"version": int(version)},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    return _delta_commit(
+        table_path, cur["version"] + 1, actions, "RESTORE",
+        {"version": int(version)},
     )
-    next_version = cur["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
-    )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 def _delta_layout_rewrite(
@@ -3634,29 +3531,10 @@ def _delta_layout_rewrite(
         opp["zOrderBy"] = json.dumps(list(zorder_by))
     else:
         opp["binpack"] = True
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": opp,
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    version = _delta_commit(
+        table_path, state["version"] + 1, actions, "OPTIMIZE", opp
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
-    )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version, {"removed": n_removed, "added": n_added}
+    return version, {"removed": n_removed, "added": n_added}
 
 
 def binpack_delta(
@@ -3926,29 +3804,10 @@ def truncate_delta(table_path: str) -> tuple[int, int | None]:
         if add.get("deletionVector"):
             rm["deletionVector"] = add["deletionVector"]
         actions.append({"remove": rm})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "TRUNCATE",
-                "operationParameters": {},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    version = _delta_commit(
+        table_path, state["version"] + 1, actions, "TRUNCATE", {}
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
-    )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version, n_rows
+    return version, n_rows
 
 
 def truncate_iceberg(table_path: str) -> tuple[int, int | None]:
@@ -4219,7 +4078,6 @@ def alter_delta_table(
         new_meta["partitionColumns"] = [
             ren_l.get(c.lower(), c) for c in meta["partitionColumns"]
         ]
-    ts = int(time.time() * 1000)
     opp = {}
     if add_columns:
         opp["add"] = json.dumps([[n, t] for n, t in add_columns])
@@ -4227,30 +4085,10 @@ def alter_delta_table(
         opp["drop"] = json.dumps(drop_columns)
     if rename_columns:
         opp["rename"] = json.dumps(rename_columns)
-    actions = [
-        {"metaData": new_meta},
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "ALTER TABLE",
-                "operationParameters": opp,
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        },
-    ]
-    next_version = state["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
+    return _delta_commit(
+        table_path, state["version"] + 1, [{"metaData": new_meta}],
+        "ALTER TABLE", opp,
     )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 # -- Apache Hudi (copy-on-write): timeline read -----------------------------
@@ -5514,10 +5352,7 @@ def _hudi_complete(
         # instant on (their pre-instant slices hide at read time).
         meta["partitionToReplaceFileIds"] = replaced_fids
         ext = "replacecommit"
-    commit_path = os.path.join(hdir, f"{instant}.{ext}")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w", encoding="utf-8") as f:
-        json.dump(meta, f)
+    create_file(os.path.join(hdir, f"{instant}.{ext}"), json.dumps(meta))
     # requested/inflight markers are cleaned once completed.
     for ext in ("requested", "inflight"):
         p = os.path.join(hdir, f"{instant}.{ext}")
@@ -6591,9 +6426,9 @@ def write_hudi(
     Returns the commit instant. Scale: the merge is one join keyed by
     record key + one shuffle by file group; untouched file groups cost
     NOTHING (no read, no write) — Hudi's own CoW economics. Timeline
-    completion is a single O_EXCL ``.commit`` create. The key frame is
-    size-gated (broadcast only for CDC-sized batches; AQE picks the
-    strategy for backfills) and the affected-group planning collect is
+    completion is a single put-if-absent ``.commit`` publish. The key
+    frame is size-gated (broadcast only for CDC-sized batches; AQE picks
+    the strategy for backfills) and the affected-group planning collect is
     LIMIT-bounded at ``max_affected_file_groups``: past the bound the
     whole table rewrites into fresh groups at one REPLACECOMMIT
     instant instead of planning per-group."""
@@ -7320,11 +7155,18 @@ def truncate_hudi(table_path: str) -> tuple[str | None, int | None]:
 
 
 def _iceberg_current_metadata_named(table_path: str) -> tuple[str, dict]:
-    """(chosen metadata file name, parsed metadata)."""
+    """(chosen metadata file name, parsed metadata). ``version-hint.text``
+    names the current version; when it is missing, empty or names no
+    file, the listing's newest version is taken instead. Either way an
+    unpadded ``v<N>`` then rolls forward while ``v<N+1>.metadata.json``
+    exists, as Iceberg's ``HadoopTableOperations`` does: a writer
+    stopped after publishing its metadata file but before updating the
+    hint leaves the hint stale, and that published version is
+    committed."""
     mdir = os.path.join(table_path, "metadata")
     if not os.path.isdir(mdir):
         raise FileNotFoundError(f"no Iceberg table at {table_path} (no metadata/)")
-    candidates = [f for f in os.listdir(mdir) if f.endswith(".metadata.json")]
+    candidates = {f for f in os.listdir(mdir) if f.endswith(".metadata.json")}
     if not candidates:
         raise FileNotFoundError(f"no *.metadata.json under {mdir}")
     chosen = None
@@ -7332,10 +7174,9 @@ def _iceberg_current_metadata_named(table_path: str) -> tuple[str, dict]:
     if os.path.isfile(hint):
         with open(hint, encoding="ascii") as f:
             v = f.read().strip()
-        for name in (f"v{v}.metadata.json",):
-            if name in candidates:
-                chosen = name
-        if chosen is None:
+        if f"v{v}.metadata.json" in candidates:
+            chosen = f"v{v}.metadata.json"
+        elif v.isdigit():
             pref = [c for c in candidates if c.startswith(f"{int(v):05d}-")]
             chosen = pref[0] if pref else None
     if chosen is None:
@@ -7349,8 +7190,47 @@ def _iceberg_current_metadata_named(table_path: str) -> tuple[str, dict]:
             if (m := re.fullmatch(r"v(\d+)\.metadata\.json", c))
         ]
         chosen = max(vstyle)[1] if vstyle else sorted(candidates)[-1]
+    while (m := re.fullmatch(r"v(\d+)\.metadata\.json", chosen)) and (
+        nxt := f"v{int(m.group(1)) + 1}.metadata.json"
+    ) in candidates:
+        chosen = nxt
     with open(os.path.join(mdir, chosen), encoding="utf-8") as f:
         return chosen, json.load(f)
+
+
+def _ice_meta_version(chosen: str, meta: dict) -> int:
+    """Version number of the metadata file ``chosen``: the N of an
+    unpadded ``v<N>.metadata.json``, else its metadata-log position."""
+    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
+    return int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
+
+
+def _ice_commit_metadata(
+    table_path: str,
+    chosen: str | None,
+    meta: dict,
+    new_meta: dict,
+    now_ms: int,
+) -> int:
+    """Commit ``new_meta`` as the version after ``chosen`` (``None``:
+    the table's first), stamping ``last-updated-ms`` and logging
+    ``chosen`` in ``metadata-log``. ``v<N>.metadata.json`` is
+    published put-if-absent (a rival that took N raises
+    ``FileExistsError``); ``version-hint.text`` is replaced after it,
+    and a crash between the two leaves a stale hint the resolver rolls
+    forward past. Returns N."""
+    log = list(meta.get("metadata-log", []))
+    if chosen is not None:
+        log.append({"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"})
+    new_meta["last-updated-ms"] = now_ms
+    new_meta["metadata-log"] = log
+    version = 1 if chosen is None else _ice_meta_version(chosen, meta) + 1
+    mdir = os.path.join(table_path, "metadata")
+    create_file(
+        os.path.join(mdir, f"v{version}.metadata.json"), json.dumps(new_meta)
+    )
+    replace_file(os.path.join(mdir, "version-hint.text"), str(version))
+    return version
 
 
 def _iceberg_current_metadata(table_path: str) -> dict:
@@ -8708,7 +8588,9 @@ def read_iceberg(
 # driver-side commit writes the Avro manifest + manifest list (via
 # formats/avro_lite, field-ids included) and the next v<N>.metadata.json
 # under the Hadoop-catalog convention (version-hint.text updated last).
-# Single-writer like write_delta: the metadata JSON is created O_EXCL.
+# Single-writer like write_delta: the metadata JSON is published
+# put-if-absent, and readers roll a stale hint forward to the newest
+# published v<N> (_ice_commit_metadata, _iceberg_current_metadata_named).
 
 _ICE_PART_FIELD_ID0 = 1000  # spec: partition field ids start at 1000
 
@@ -10503,10 +10385,8 @@ def upgrade_iceberg_v1_to_v2(table_path: str) -> int:
 
     chosen, meta = _iceberg_current_metadata_named(table_path)
     fv = int(meta.get("format-version", 1))
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    cur_version = int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
     if fv == 2:
-        return cur_version
+        return _ice_meta_version(chosen, meta)
     if fv != 1:
         raise NotImplementedError(
             f"cannot upgrade format-version {fv} (v1 -> v2 only)"
@@ -10580,22 +10460,7 @@ def upgrade_iceberg_v1_to_v2(table_path: str) -> int:
             s.pop("manifests", None)
         snaps.append(s)
     new_meta["snapshots"] = snaps
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    version = cur_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
-    return version
+    return _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
 
 
 def upgrade_iceberg_v2_to_v3(table_path: str) -> int:
@@ -10618,10 +10483,8 @@ def upgrade_iceberg_v2_to_v3(table_path: str) -> int:
     version number."""
     chosen, meta = _iceberg_current_metadata_named(table_path)
     fv = int(meta.get("format-version", 1))
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    cur_version = int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
     if fv == 3:
-        return cur_version
+        return _ice_meta_version(chosen, meta)
     if fv != 2:
         raise NotImplementedError(
             f"cannot upgrade format-version {fv} to 3 (v2 -> v3 only; "
@@ -10650,27 +10513,11 @@ def upgrade_iceberg_v2_to_v3(table_path: str) -> int:
                 "which v3 forbids — run compact_iceberg first to fold "
                 "them away"
             )
-    mdir = os.path.join(table_path, "metadata")
     now_ms = int(time.time() * 1000)
     new_meta = dict(meta)
     new_meta["format-version"] = 3
     new_meta["next-row-id"] = int(meta.get("next-row-id", 0))
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    version = cur_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
-    return version
+    return _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
 
 
 def alter_iceberg_table(
@@ -10787,29 +10634,11 @@ def alter_iceberg_table(
     if cur_schema.get("identifier-field-ids"):
         new_schema["identifier-field-ids"] = cur_schema["identifier-field-ids"]
     now_ms = int(time.time() * 1000)
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    prev_version = int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
     new_meta = dict(meta)
     new_meta["schemas"] = list(meta.get("schemas", [])) + [new_schema]
     new_meta["current-schema-id"] = new_schema_id
     new_meta["last-column-id"] = counter[0]
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    mdir = os.path.join(table_path, "metadata")
-    version = prev_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
-    return version
+    return _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
 
 
 def iceberg_default_spec_entries(table_path: str) -> list[str]:
@@ -10957,12 +10786,9 @@ def evolve_iceberg_partition_spec(
         ),
         {"fields": []},
     )
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    prev_version = (
-        int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
-    )
     if _shape(cur_spec.get("fields", [])) == _shape(new_fields):
-        return prev_version  # already the default layout: no commit
+        # already the default layout: no commit
+        return _ice_meta_version(chosen, meta)
     new_spec_id = 1 + max(
         (int(s.get("spec-id", 0)) for s in specs), default=-1
     )
@@ -10975,25 +10801,7 @@ def evolve_iceberg_partition_spec(
     new_meta["last-partition-id"] = max(
         last_pid, int(meta.get("last-partition-id") or 0)
     )
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    mdir = os.path.join(table_path, "metadata")
-    version = prev_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(
-        os.path.join(mdir, "version-hint.text"), "w", encoding="ascii"
-    ) as f:
-        f.write(str(version))
-    return version
+    return _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
 
 
 def write_iceberg(
@@ -11126,10 +10934,6 @@ def write_iceberg(
             # survive); re-enrich for staging.
             part_fields = _ice_spec_part_fields(spec, cur_schema)
             spec_fields = spec.get("fields", spec_fields)
-        m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-        prev_version = (
-            int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
-        )
         if meta.get("current-snapshot-id") not in (None, -1):
             # append: carried forward in the new manifest list.
             # overwrite: rewritten as a DELETE-MARKING manifest below.
@@ -11145,7 +10949,6 @@ def write_iceberg(
         table_uuid = meta.get("table-uuid") or str(uuid.uuid4())
         prev_snapshots = list(meta.get("snapshots", []))
         prev_snap_log = list(meta.get("snapshot-log", []))
-        prev_meta_log = list(meta.get("metadata-log", []))
         parent_id = meta.get("current-snapshot-id")
         if parent_id in (None, -1):
             parent_id = None
@@ -11179,10 +10982,10 @@ def write_iceberg(
         }
     else:
         os.makedirs(mdir, exist_ok=True)
-        prev_version = 0
+        chosen, meta = None, {}
         last_seq = 0
         table_uuid = str(uuid.uuid4())
-        prev_snapshots, prev_snap_log, prev_meta_log = [], [], []
+        prev_snapshots, prev_snap_log = [], []
         parent_id = None
         location = table_path
         carry = None
@@ -11417,7 +11220,6 @@ def write_iceberg(
         "table-uuid": table_uuid,
         "location": location,
         "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
         "last-column-id": last_col_id,
         **({"next-row-id": next_row_id + added_rows} if table_fv == 3 else {}),
         **registry,
@@ -11427,27 +11229,8 @@ def write_iceberg(
         "snapshots": prev_snapshots + [snap],
         "snapshot-log": prev_snap_log
         + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}],
-        "metadata-log": (
-            prev_meta_log
-            + (
-                [{"timestamp-ms": now_ms,
-                  "metadata-file": f"metadata/v{prev_version}.metadata.json"}]
-                if exists
-                else []
-            )
-        ),
     }
-    version = prev_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
+    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
     return snapshot_id
 
 
@@ -12792,7 +12575,7 @@ def _ice_commit_snapshot(
     meta_updates: dict | None = None,
 ) -> int:
     """Write the manifest list, append the snapshot, and commit the
-    next metadata JSON (O_EXCL; version-hint updated last) — the
+    next metadata JSON through ``_ice_commit_metadata`` — the
     shared tail of every snapshot-producing Iceberg write here.
     ``extra_snapshot`` merges extra keys into the snapshot record
     (v3 ``first-row-id``); ``meta_updates`` into the table metadata
@@ -12815,31 +12598,15 @@ def _ice_commit_snapshot(
         "schema-id": int(meta.get("current-schema-id", 0)),
         **(extra_snapshot or {}),
     }
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    prev_version = int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
     new_meta = dict(meta)
     new_meta.update(meta_updates or {})
     new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
     new_meta["current-snapshot-id"] = snapshot_id
     new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
     new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
         {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
     ]
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    version = prev_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
+    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
     return snapshot_id
 
 
@@ -13527,26 +13294,10 @@ def rollback_iceberg(table_path: str, snapshot_id: int) -> int:
     now_ms = int(time.time() * 1000)
     new_meta = dict(meta)
     new_meta["current-snapshot-id"] = sid
-    new_meta["last-updated-ms"] = now_ms
     new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
         {"timestamp-ms": now_ms, "snapshot-id": sid}
     ]
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    version = (int(m.group(1)) if m else len(new_meta["metadata-log"])) + 1
-    mdir = os.path.join(table_path, "metadata")
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
+    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
     return sid
 
 
@@ -13640,23 +13391,7 @@ def expire_iceberg_snapshots(table_path: str, keep_last: int = 2) -> dict:
     new_meta["snapshot-log"] = [
         e for e in meta.get("snapshot-log", []) if e.get("snapshot-id") in keep_ids
     ]
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    version = (int(m.group(1)) if m else len(new_meta["metadata-log"])) + 1
-    mdir = os.path.join(table_path, "metadata")
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
+    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
     # Metadata committed — deletions are now pure garbage collection.
     deleted = 0
     for p in sorted(dead):
@@ -13734,10 +13469,10 @@ def vacuum_delta(
 
     Files younger than ``grace_seconds`` (mtime) are SKIPPED — native
     VACUUM's retention-hours rationale (r10 advice #2): writers stage
-    parquet/DV files BEFORE their O_EXCL log commit, so an unreferenced
-    young file may be a commit in flight, and deleting it would commit
-    a version referencing missing data. Pass 0 only when no writer can
-    be running. Returns {"deleted_files", "deleted_cdc_files"}."""
+    parquet/DV files BEFORE their put-if-absent log commit, so an
+    unreferenced young file may be a commit in flight, and deleting it
+    would commit a version referencing missing data. Pass 0 only when
+    no writer can be running. Returns {"deleted_files", "deleted_cdc_files"}."""
     if retain_versions < 1:
         raise ValueError("retain_versions must be >= 1")
     if grace_seconds < 0:

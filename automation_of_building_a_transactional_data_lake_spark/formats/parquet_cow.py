@@ -30,8 +30,9 @@ reference, which simply serializes writers with
 ```
 <warehouse>/<db>/<table>/
   _LATEST            text file holding the committed version number;
-                     written to a temp name then os.rename'd (atomic on
-                     POSIX) — readers never observe a partial commit
+                     published with ``atomic.replace_file`` (fsynced
+                     temp file, then os.replace) — readers never
+                     observe a partial commit
   _refs.json         named refs: tags pinning snapshot versions
                      (Iceberg tag semantics; vacuum never drops a
                      tagged version)
@@ -84,6 +85,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..spec import TableSpec
+from .atomic import replace_file
 from .transforms import parse_transform
 
 # Version directories deliberately do NOT start with "_": Hadoop's path
@@ -307,12 +309,7 @@ class ParquetCowTable:
             refs["branches"][self._branch]["head"] = n
             self._write_refs(refs)
             return
-        tmp = os.path.join(self.path, f".{_LATEST}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="ascii") as f:
-            f.write(str(n))
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._latest_path())
+        replace_file(self._latest_path(), str(n))
 
     def _write_staging(self, df: DataFrame, cluster: bool = True) -> str:
         """Write a full snapshot into an anonymous staging directory
@@ -1484,12 +1481,7 @@ class ParquetCowTable:
         return self._read_refs()["tags"]
 
     def _write_refs(self, refs: dict) -> None:
-        tmp = os.path.join(self.path, f".{_REFS}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(refs, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._refs_path())
+        replace_file(self._refs_path(), json.dumps(refs))
 
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Pin a committed snapshot under a name (Iceberg
@@ -2019,10 +2011,7 @@ class ParquetCowTable:
         mdir = os.path.join(self.path, _MANIFEST_DIR)
         os.makedirs(mdir, exist_ok=True)
         mpath = os.path.join(mdir, "manifest")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write("\n".join(self.data_files()) + "\n")
-        os.rename(tmp, mpath)
+        replace_file(mpath, "\n".join(self.data_files()) + "\n")
         return mpath
 
     def _zorder_numeric(self, df: DataFrame, c: str):

@@ -41,13 +41,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import dedupe_latest
 from ..spec import TableSpec
+from .atomic import replace_file
 from .parquet_cow import ConcurrentWriteError, ConstraintViolation, MergeError
 
 _LATEST = "_LATEST"
@@ -181,12 +181,7 @@ class ParquetMorTable:
             refs["branches"][self._branch]["head"] = n
             self._write_refs(refs)
             return n
-        tmp = os.path.join(self.path, f".{_LATEST}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="ascii") as f:
-            f.write(str(n))
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._latest_path())
+        replace_file(self._latest_path(), str(n))
         return n
 
     # -- write path --------------------------------------------------------
@@ -370,12 +365,7 @@ class ParquetMorTable:
         }
 
     def _write_refs(self, refs: dict) -> None:
-        tmp = os.path.join(self.path, f".{_REFS}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(refs, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, os.path.join(self.path, _REFS))
+        replace_file(os.path.join(self.path, _REFS), json.dumps(refs))
 
     def tags(self) -> dict[str, int]:
         """All named tags: ``{name: snapshot}`` (same contract as the
@@ -489,12 +479,7 @@ class ParquetMorTable:
                 f"branch {name!r} forked; publishing would drop those "
                 "commits — re-branch and replay"
             )
-        tmp = os.path.join(self.path, f".{_LATEST}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="ascii") as f:
-            f.write(str(b["head"]))
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._latest_path())
+        replace_file(self._latest_path(), str(b["head"]))
         del refs["branches"][name]
         self._write_refs(refs)
         return b["head"]

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 from contextlib import contextmanager, suppress
 
@@ -44,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..formats.atomic import replace_file
 from ..formats.changes import CHANGE_TYPE_COL, snapshot_changes
 from ..formats.parquet_cow import ConcurrentWriteError
 from ..spec import TableSpec
@@ -111,11 +111,7 @@ class ManagedAnnIndex:
             return json.load(f)
 
     def _write_meta(self, meta: dict) -> None:
-        path = self._meta_path()
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(meta, f)
-        os.replace(tmp, path)
+        replace_file(self._meta_path(), json.dumps(meta))
 
     def exists(self) -> bool:
         return self._table().exists() and os.path.isfile(self._meta_path())

@@ -394,6 +394,11 @@ def minhash_near_dup_pairs(
     # ENSURE_REQUIREMENTS exchange, which AQE coalesced back to ~one
     # task (r18: observed "AQEShuffleRead coalesced" feeding the
     # verify stage on the checkpointed path).
+    # Trade-off: no partial aggregate runs before this exchange, so
+    # every duplicate candidate pair (one per band the two docs share)
+    # crosses the shuffle, and shuffle volume grows with that
+    # duplicate multiplicity. It won at the measured scales; on a
+    # near-duplicate-heavy corpus with many bands it may not.
     cand = cand.repartition(
         cand.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
     ).distinct()
@@ -568,7 +573,10 @@ def ngram_jaccard_prefix_pairs(
     # dedup's ENSURE_REQUIREMENTS exchange, which AQE coalesced back
     # to ~one task on the checkpointed path. This way the user
     # REPARTITION_BY_NUM shuffle doubles as the distinct's clustering
-    # (one exchange, not two) and survives to runtime.
+    # (one exchange, not two) and survives to runtime. Same shuffle
+    # trade-off as in minhash_near_dup_pairs: a pair found through
+    # several shared prefix tokens crosses the exchange once per token,
+    # before the distinct.
     cand = cand.repartition(
         cand.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
     ).distinct()

@@ -41,12 +41,12 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..formats.atomic import replace_file
 from ..formats.changes import CHANGE_TYPE_COL, snapshot_changes
 from ..spec import TableSpec
 from .dedup import (
@@ -112,11 +112,7 @@ class ManagedDedupIndex:
             return json.load(f)
 
     def _write_meta(self, meta: dict) -> None:
-        path = self._meta_path()
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(meta, f)
-        os.replace(tmp, path)
+        replace_file(self._meta_path(), json.dumps(meta))
 
     def exists(self) -> bool:
         return self._table().exists() and os.path.isfile(self._meta_path())

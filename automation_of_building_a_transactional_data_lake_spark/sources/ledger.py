@@ -27,7 +27,8 @@ here, noted for honesty.
 from __future__ import annotations
 
 import os
-import uuid
+
+from ..formats.atomic import replace_file
 
 _LEDGER_DIR = "_ledger"
 _LEDGER_FILE = "processed"
@@ -70,9 +71,4 @@ class FileLedger:
         ordering, ``src/hudi/hudi-cdc-load.py:242``)."""
         merged = sorted(self.processed() | set(files))
         os.makedirs(self.dir, exist_ok=True)
-        tmp = os.path.join(self.dir, f".{_LEDGER_FILE}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write("\n".join(merged) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self.path)
+        replace_file(self.path, "\n".join(merged) + "\n")

@@ -99,9 +99,27 @@ def test_spread_width_decision(spark):
             wide.rdd.getNumPartitions()
             >= spark.sparkContext.defaultParallelism
         )  # the estimate matches Spark's actual split count
+
+        # A gzip JSON file is one split whatever its size: the size
+        # estimate does not apply to non-splittable scans.
+        one.coalesce(1).write.option("compression", "gzip").json(
+            os.path.join(tmp, "gz")
+        )
+        gz = spark.read.schema(one.schema).json(os.path.join(tmp, "gz"))
+        assert gz.rdd.getNumPartitions() == 1
+        assert "REPARTITION_BY_NUM" in _formatted_plan(_spread(gz))
+
+        # spark.sql.files.minPartitionNum sets the bin size in place of
+        # defaultParallelism: at 1, the whole file packs into one split.
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.set("spark.sql.files.minPartitionNum", "1")
+        packed = spark.read.parquet(os.path.join(tmp, "one"))
+        assert packed.rdd.getNumPartitions() == 1
+        assert "REPARTITION_BY_NUM" in _formatted_plan(_spread(packed))
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
         spark.conf.unset("spark.sql.files.openCostInBytes")
+        spark.conf.unset("spark.sql.files.minPartitionNum")
 
     # The file-based shortcut only applies to narrow-over-scan plans
     # (r18 advisory): a shuffle above the scan changes the frame's
