@@ -53,6 +53,7 @@ backfills).
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
 import os
@@ -3596,70 +3597,22 @@ def binpack_iceberg(
     (debt first: rewriting data files above the deletes' sequence
     numbers would un-delete rows). Returns (new snapshot id or None,
     {"removed": n, "added": m})."""
-    from .avro_lite import read_avro_file
-
     if target_bytes <= 0:
         raise ValueError("target_bytes must be positive")
-    chosen, meta = _iceberg_current_metadata_named(table_path)
-    bp_fv = int(meta.get("format-version", 1))
-    if bp_fv not in (2, 3):
+    tx = _ice_open(
+        table_path, "zorder_iceberg" if zorder_by else "binpack_iceberg", (2, 3)
+    )
+    if any(tx.live_deletes()):
         raise NotImplementedError(
-            f"binpack on a format-version {bp_fv} Iceberg table is not "
-            "supported (v2 and v3 only; v1: run upgrade_iceberg_v1_to_v2 "
-            "first)"
+            "the snapshot carries live row-level delete files; run "
+            "compact_iceberg first (rewriting data above the deletes' "
+            "sequence numbers would resurrect deleted rows)"
         )
-    schema = _iceberg_table_schema(meta)
-    if schema is None:
-        raise ValueError(f"Iceberg metadata at {table_path} carries no schema")
-    cur_schema = next(
-        s for s in meta.get("schemas", [])
-        if s.get("schema-id") == meta.get("current-schema-id")
-    )
-    spec = next(
-        (
-            s for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id")
-        ),
-        {"fields": []},
-    )
-    part_fields = _ice_spec_part_fields(spec, cur_schema)
-    spec_fields = spec.get("fields", [])
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    if sid in (None, -1) or sid not in snaps:
-        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
-    snap = snaps[sid]
-    _s, mlist_records = read_avro_file(
-        _iceberg_local_path(snap["manifest-list"], table_path)
-    )
-    data_recs = [r for r in mlist_records if r.get("content", 0) == 0]
-    delete_recs = [r for r in mlist_records if r.get("content", 0) != 0]
-    for r in delete_recs:
-        _sd, dentries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        if any(e.get("status", 1) != 2 for e in dentries):
-            raise NotImplementedError(
-                "the snapshot carries live row-level delete files; run "
-                "compact_iceberg first (rewriting data above the deletes' "
-                "sequence numbers would resurrect deleted rows)"
-            )
 
-    manifests: list[dict] = []
+    manifests = tx.live_manifests()
     by_part: dict[str, list[tuple[str, int]]] = {}
-    for r in data_recs:
-        _s2, entries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        live = [e for e in entries if e.get("status", 1) != 2]
-        paths = [
-            os.path.abspath(
-                _iceberg_local_path(e["data_file"]["file_path"], table_path)
-            )
-            for e in live
-        ]
-        manifests.append({"rec": r, "entries": live, "paths": paths})
-        for e, p in zip(live, paths):
+    for mf in manifests:
+        for e, p in zip(mf["entries"], mf["paths"]):
             dfr = e["data_file"]
             _ice_require_parquet(dfr, "binpack/zorder rewrite")
             size = int(dfr.get("file_size_in_bytes", 0) or 0)
@@ -3678,7 +3631,7 @@ def binpack_iceberg(
         return None, {"removed": 0, "added": 0}
 
     n_bins = max(1, -(-total_bytes // target_bytes))
-    scan = spark.read.schema(schema).parquet(*sorted(retire))
+    scan = spark.read.schema(tx.schema).parquet(*sorted(retire))
     if zorder_by:
         from .zorder import zorder_value
 
@@ -3691,55 +3644,24 @@ def binpack_iceberg(
         )
     else:
         out = scan.coalesce(int(n_bins))
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int >> 65
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    entry_schema, mlist_schema = _ice_manifest_schemas(
-        part_fields, v3=bp_fv == 3
-    )
-    mdir = os.path.join(table_path, "metadata")
     staged = _iceberg_stage_files(
-        out, table_path, part_fields,
-        bounds_fields=_ice_schema_bounds_fields(cur_schema),
-        count_fields=_ice_schema_count_fields(cur_schema),
+        out, table_path, tx.part_fields,
+        bounds_fields=_ice_schema_bounds_fields(tx.cur_schema),
+        count_fields=_ice_schema_count_fields(tx.cur_schema),
     )
-    cur_spec_id = int(meta.get("default-spec-id") or 0)
-    new_mlist: list[dict] = []
-    add_rec, n_added = _ice_add_data_manifest(
-        staged, part_fields, entry_schema, cur_schema, spec_fields, mdir,
-        snapshot_id, seq, spec_id=cur_spec_id,
-    )
-    if add_rec is not None:
-        new_mlist.append(add_rec)
-    new_mlist.extend(
-        _ice_retire_data_manifests(
-            manifests, retire, seq, snapshot_id,
-            entry_schema, cur_schema, spec_fields, mdir,
-            spec_id=cur_spec_id,
-            all_specs={
-                int(sp.get("spec-id") or 0): sp
-                for sp in meta.get("partition-specs", [])
-            },
-        )
-    )
-    new_mlist.extend(_mlist_carry(r) for r in delete_recs)
-    summary = {
-        "operation": "replace",
-        "added-data-files": str(n_added),
-        "deleted-data-files": str(len(retire)),
-    }
-    bp_extra = bp_meta_up = None
-    if bp_fv == 3:
-        # Layout-only rewrite: no rows added; rewritten files carry
-        # NULL first_row_id (unknown lineage — the compact_iceberg
-        # divergence note applies).
-        nri = int(meta.get("next-row-id", 0))
-        bp_extra = {"first-row-id": nri}
-        bp_meta_up = {"next-row-id": nri}
-    new_sid = _ice_commit_snapshot(
-        table_path, chosen, meta, mlist_schema, new_mlist,
-        snapshot_id, sid, seq, now_ms, summary,
-        extra_snapshot=bp_extra, meta_updates=bp_meta_up,
+    new_mlist, n_added = _ice_add_data_manifest(tx, staged)
+    new_mlist += _ice_retire_data_manifests(tx, manifests, retire)
+    new_mlist += [_mlist_carry(r) for r in tx.delete_recs]
+    # Layout-only rewrite: no rows added; on v3 the rewritten files
+    # carry NULL first_row_id (unknown lineage — the compact_iceberg
+    # divergence note applies).
+    new_sid = tx.commit(
+        new_mlist,
+        {
+            "operation": "replace",
+            "added-data-files": str(n_added),
+            "deleted-data-files": str(len(retire)),
+        },
     )
     return new_sid, {"removed": len(retire), "added": n_added}
 
@@ -3819,104 +3741,31 @@ def truncate_iceberg(table_path: str) -> tuple[int, int | None]:
     refuses toward ``upgrade_iceberg_v1_to_v2``. Returns (new snapshot
     id, removed logical row count from manifest record counts — None
     when live row-level deletes make the manifest counts inexact)."""
-    from .avro_lite import read_avro_file
-
-    chosen, meta = _iceberg_current_metadata_named(table_path)
-    if int(meta.get("format-version", 1)) != 2:
-        raise NotImplementedError(
-            f"TRUNCATE on a format-version {meta.get('format-version', 1)} "
-            "Iceberg table is not supported (v2 only; v1: run "
-            "upgrade_iceberg_v1_to_v2 first; v3 writes are not "
-            "implemented)"
-        )
-    cur_schema = next(
-        s for s in meta.get("schemas", [])
-        if s.get("schema-id") == meta.get("current-schema-id")
-    )
-    spec = next(
-        (
-            s for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id")
-        ),
-        {"fields": []},
-    )
-    part_fields = _ice_spec_part_fields(spec, cur_schema)
-    spec_fields = spec.get("fields", [])
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    if sid in (None, -1) or sid not in snaps:
-        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
-    snap = snaps[sid]
-    _s, mlist_records = read_avro_file(
-        _iceberg_local_path(snap["manifest-list"], table_path)
-    )
-    data_recs = [r for r in mlist_records if r.get("content", 0) == 0]
-    delete_recs = [r for r in mlist_records if r.get("content", 0) != 0]
-    manifests: list[dict] = []
-    retire: set[str] = set()
-    n_rows: int | None = 0
-    for r in data_recs:
-        _s2, entries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        live = [e for e in entries if e.get("status", 1) != 2]
-        paths = [
-            os.path.abspath(
-                _iceberg_local_path(e["data_file"]["file_path"], table_path)
-            )
-            for e in live
-        ]
-        manifests.append({"rec": r, "entries": live, "paths": paths})
-        retire.update(paths)
-        if n_rows is not None:
-            n_rows += sum(
-                int(e["data_file"].get("record_count", 0) or 0) for e in live
-            )
+    tx = _ice_open(table_path, "truncate_iceberg")
+    manifests = tx.live_manifests()
+    retire = {p for mf in manifests for p in mf["paths"]}
     if not retire:
-        return sid, 0  # already empty: no-op, no commit
-    for r in delete_recs:
-        _sd, dentries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        if any(e.get("status", 1) != 2 for e in dentries):
-            # Live row-level deletes: the manifest record counts
-            # overcount the logical rows removed — stay honest.
-            n_rows = None
-            break
-
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int >> 65
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    entry_schema, mlist_schema = _ice_manifest_schemas(part_fields)
-    mdir = os.path.join(table_path, "metadata")
-    cur_spec_id = int(meta.get("default-spec-id") or 0)
-    all_specs = {
-        int(sp.get("spec-id") or 0): sp
-        for sp in meta.get("partition-specs", [])
-    }
-    new_mlist = _ice_retire_data_manifests(
-        manifests, retire, seq, snapshot_id,
-        entry_schema, cur_schema, spec_fields, mdir,
-        spec_id=cur_spec_id, all_specs=all_specs,
-    )
-    new_mlist.extend(
-        _ice_retire_delete_manifests(
-            delete_recs, table_path, seq, snapshot_id,
-            entry_schema, cur_schema, spec_fields, part_fields, mdir,
-            spec_id=cur_spec_id, all_specs=all_specs,
+        return tx.parent_id, 0  # already empty: no-op, no commit
+    # Live row-level deletes: the manifest record counts overcount the
+    # logical rows removed — stay honest.
+    n_rows = (
+        None
+        if any(tx.live_deletes())
+        else sum(
+            int(e["data_file"].get("record_count", 0) or 0)
+            for mf in manifests
+            for e in mf["entries"]
         )
     )
+    new_mlist = _ice_retire_data_manifests(tx, manifests, retire)
+    new_mlist += _ice_retire_delete_manifests(tx, tx.delete_recs)
     summary = {
         "operation": "delete",
         "deleted-data-files": str(len(retire)),
     }
     if n_rows is not None:
         summary["deleted-records"] = str(n_rows)
-    new_sid = _ice_commit_snapshot(
-        table_path, chosen, meta, mlist_schema, new_mlist,
-        snapshot_id, sid, seq, now_ms, summary,
-    )
-    return new_sid, n_rows
+    return tx.commit(new_mlist, summary), n_rows
 
 
 def alter_delta_table(
@@ -7218,7 +7067,13 @@ def _ice_commit_metadata(
     published put-if-absent (a rival that took N raises
     ``FileExistsError``); ``version-hint.text`` is replaced after it,
     and a crash between the two leaves a stale hint the resolver rolls
-    forward past. Returns N."""
+    forward past. A ``main`` branch ref follows ``current-snapshot-id``:
+    native writers record the current snapshot in both places, and
+    native readers refuse metadata where the two disagree. Returns N."""
+    refs = new_meta.get("refs") or {}
+    sid = new_meta.get("current-snapshot-id")
+    if "main" in refs and sid not in (None, -1):
+        new_meta["refs"] = {**refs, "main": {**refs["main"], "snapshot-id": sid}}
     log = list(meta.get("metadata-log", []))
     if chosen is not None:
         log.append({"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"})
@@ -9328,25 +9183,37 @@ def _ice_datafile_carry(dfr: dict) -> dict:
 
 def _mlist_carry(rec: dict) -> dict:
     """Normalize a manifest-list record CARRIED FORWARD from a foreign
-    snapshot into the engine's strict v2 mlist schema: foreign/older
-    writers may omit the count/sequence fields (advisory for planning),
-    and re-serializing a sparse record through a required-long schema
-    would crash the commit."""
-    seq = int(rec.get("sequence_number") or 0)
+    snapshot into the engine's strict v2 mlist schema. Format-version 1
+    writers name the file counts ``added_data_files_count`` /
+    ``existing_data_files_count`` / ``deleted_data_files_count``, and
+    foreign or older writers may omit any count or sequence field
+    (advisory for planning); re-serializing a sparse record through a
+    required-long schema would crash the commit, so absent and null
+    values carry as 0."""
+
+    def count(name: str, v1_name: str = "") -> int:
+        v = rec.get(name)
+        return int((rec.get(v1_name) if v is None else v) or 0)
+
+    seq = count("sequence_number")
     return {
         "manifest_path": rec["manifest_path"],
-        "manifest_length": int(rec.get("manifest_length") or 0),
-        "partition_spec_id": int(rec.get("partition_spec_id") or 0),
-        "content": int(rec.get("content") or 0),
+        "manifest_length": count("manifest_length"),
+        "partition_spec_id": count("partition_spec_id"),
+        "content": count("content"),
         "sequence_number": seq,
-        "min_sequence_number": int(rec.get("min_sequence_number") or seq),
-        "added_snapshot_id": int(rec.get("added_snapshot_id") or 0),
-        "added_files_count": int(rec.get("added_files_count") or 0),
-        "existing_files_count": int(rec.get("existing_files_count") or 0),
-        "deleted_files_count": int(rec.get("deleted_files_count") or 0),
-        "added_rows_count": int(rec.get("added_rows_count") or 0),
-        "existing_rows_count": int(rec.get("existing_rows_count") or 0),
-        "deleted_rows_count": int(rec.get("deleted_rows_count") or 0),
+        "min_sequence_number": count("min_sequence_number") or seq,
+        "added_snapshot_id": count("added_snapshot_id"),
+        "added_files_count": count("added_files_count", "added_data_files_count"),
+        "existing_files_count": count(
+            "existing_files_count", "existing_data_files_count"
+        ),
+        "deleted_files_count": count(
+            "deleted_files_count", "deleted_data_files_count"
+        ),
+        "added_rows_count": count("added_rows_count"),
+        "existing_rows_count": count("existing_rows_count"),
+        "deleted_rows_count": count("deleted_rows_count"),
     }
 
 
@@ -9364,80 +9231,268 @@ def _ice_data_manifest_meta(
     }
 
 
+class _IceTxn:
+    """One snapshot-producing Iceberg write, in the role of Iceberg's
+    ``SnapshotProducer``. It holds what every writer derives from the
+    table's current metadata before staging anything: the schemas, the
+    default partition spec and every spec by id, the current snapshot's
+    manifest-list records split into data and delete manifests, and the
+    new snapshot's id and sequence number. ``write_manifest`` writes one
+    manifest and derives its manifest-list record from the entries;
+    ``commit`` publishes the snapshot. Writers open one with
+    ``_ice_open``; ``write_iceberg`` builds one directly, because it may
+    create the table or append to one without a snapshot."""
+
+    def __init__(
+        self,
+        table_path: str,
+        chosen: str | None,
+        meta: dict,
+        op: str,
+        versions: tuple[int, ...],
+    ) -> None:
+        from .avro_lite import read_avro_file
+
+        self.fv = int(meta.get("format-version", 1))
+        if self.fv not in versions:
+            fix = (
+                f"run upgrade_iceberg_v{self.fv}_to_v{self.fv + 1} first, "
+                "a metadata-only commit"
+                if self.fv < min(versions)
+                else f"{op} does not write v{self.fv} yet"
+            )
+            raise NotImplementedError(
+                f"{op} on a format-version {self.fv} Iceberg table is not "
+                f"supported ({'/'.join(f'v{v}' for v in versions)} only; "
+                f"{fix})"
+            )
+        self.table_path, self.chosen, self.meta = table_path, chosen, meta
+        self.mdir = os.path.join(table_path, "metadata")
+        self.cur_schema = next(
+            (
+                s for s in meta.get("schemas", [])
+                if s.get("schema-id") == meta.get("current-schema-id")
+            ),
+            None,
+        )
+        if self.cur_schema is None:
+            raise ValueError(f"Iceberg metadata at {table_path} carries no schema")
+        self.specs = {
+            int(sp.get("spec-id") or 0): sp
+            for sp in meta.get("partition-specs", [])
+        }
+        self.spec_id = int(meta.get("default-spec-id") or 0)
+        spec = self.specs.get(self.spec_id, {"fields": []})
+        self.spec_fields = spec.get("fields", [])
+        self.part_fields = _ice_spec_part_fields(spec, self.cur_schema)
+        snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+        sid = meta.get("current-snapshot-id")
+        self.parent_id = sid if sid in snaps else None
+        self.mlist_records: list[dict] = []
+        if self.parent_id is not None:
+            _s, self.mlist_records = read_avro_file(
+                _iceberg_local_path(snaps[sid]["manifest-list"], table_path)
+            )
+        self.data_recs = [r for r in self.mlist_records if r.get("content", 0) == 0]
+        self.delete_recs = [r for r in self.mlist_records if r.get("content", 0) != 0]
+        self.snapshot_id = uuid.uuid4().int >> 65  # 63-bit positive long
+        self.seq = int(meta.get("last-sequence-number", 0)) + 1
+        self.next_row_id = int(meta.get("next-row-id", 0))
+        self._commit_uuid = uuid.uuid4().hex
+        self._n_manifests = 0
+
+    @functools.cached_property
+    def schema(self) -> StructType:
+        """The current schema as a Spark type (read lazily: it refuses
+        v3 column defaults, which only matter to writers that scan)."""
+        return _iceberg_table_schema(self.meta)
+
+    def live_manifests(self) -> list[dict]:
+        """The current snapshot's data manifests, each as {"rec": its
+        manifest-list record, "entries": its live entries, "paths":
+        their absolute data-file paths}."""
+        from .avro_lite import read_avro_file
+
+        out = []
+        for r in self.data_recs:
+            _s, entries = read_avro_file(
+                _iceberg_local_path(r["manifest_path"], self.table_path)
+            )
+            live = [e for e in entries if e.get("status", 1) != 2]
+            paths = [
+                os.path.abspath(
+                    _iceberg_local_path(e["data_file"]["file_path"], self.table_path)
+                )
+                for e in live
+            ]
+            out.append({"rec": r, "entries": live, "paths": paths})
+        return out
+
+    def live_deletes(self) -> tuple[list[str], list[tuple], list[tuple]]:
+        """The current snapshot's live row-level deletes, as
+        ``_ice_collect_deletes`` returns them: (position delete paths,
+        equality deletes, deletion vectors)."""
+        return _ice_collect_deletes(
+            self.table_path,
+            [
+                (r["manifest_path"], int(r.get("sequence_number") or 0))
+                for r in self.delete_recs
+            ],
+        )
+
+    def spec_parts(self, spec_id: int) -> tuple[list[dict], list[dict]]:
+        """(staging part fields, spec fields) of partition spec
+        ``spec_id``. A manifest rewrites under its own spec, so a spec
+        the metadata no longer lists, or whose source columns the
+        current schema dropped, refuses: its partition record shape
+        cannot be reconstructed."""
+        if spec_id == self.spec_id:
+            return self.part_fields, self.spec_fields
+        spec = self.specs.get(spec_id)
+        part_fields = None
+        if spec is not None:
+            try:
+                part_fields = _ice_spec_part_fields(spec, self.cur_schema)
+            except (ValueError, NotImplementedError):
+                pass
+        if part_fields is not None:
+            return part_fields, spec.get("fields", [])
+        raise NotImplementedError(
+            f"a manifest written under partition spec {spec_id} must be "
+            "rewritten, but the table metadata no longer describes that "
+            "spec — its partition record shape cannot be reconstructed "
+            "(compact the table with its native engine first)"
+        )
+
+    def write_manifest(self, entries: list[dict], content: int, spec_id: int) -> dict:
+        """Write ``entries`` as one manifest (``content`` 0: data, 1:
+        deletes) under partition spec ``spec_id``, its Avro header
+        stamped with the table's schema, spec and format version, and
+        return its manifest-list record: added/existing/deleted file and
+        row counts by entry status, and the smallest entry sequence
+        number. Delete manifests carry ``equality_ids`` (field 135), so
+        equality-delete identities survive a status-2 rewrite."""
+        from .avro_lite import write_avro_file
+
+        spec_id = int(spec_id or 0)
+        part_fields, spec_fields = self.spec_parts(spec_id)
+        entry_schema, _ml = _ice_manifest_schemas(part_fields, v3=self.fv == 3)
+        if content:
+            entry_schema["name"] = "manifest_entry_del"
+            data_file = entry_schema["fields"][-1]["type"]
+            data_file["name"] = "r2d"
+            data_file["fields"].append(
+                {
+                    "name": "equality_ids",
+                    "type": ["null", {"type": "array", "items": "int",
+                                      "element-id": 136}],
+                    "default": None,
+                    "field-id": 135,
+                }
+            )
+        mpath = os.path.join(
+            self.mdir, f"{self._commit_uuid}-m{self._n_manifests}.avro"
+        )
+        self._n_manifests += 1
+        write_avro_file(
+            mpath, entry_schema, entries,
+            extra_meta=_ice_data_manifest_meta(
+                self.cur_schema, spec_fields,
+                b"deletes" if content else b"data", spec_id, self.fv,
+            ),
+        )
+        files, rows = [0, 0, 0], [0, 0, 0]  # by status: existing, added, deleted
+        for e in entries:
+            files[e["status"]] += 1
+            rows[e["status"]] += int(e["data_file"].get("record_count") or 0)
+        return {
+            "manifest_path": f"file://{mpath}",
+            "manifest_length": os.path.getsize(mpath),
+            "partition_spec_id": spec_id, "content": int(content),
+            "sequence_number": self.seq,
+            "min_sequence_number": min(
+                (int(e["sequence_number"]) for e in entries), default=self.seq
+            ),
+            "added_snapshot_id": self.snapshot_id,
+            "added_files_count": files[1],
+            "existing_files_count": files[0],
+            "deleted_files_count": files[2],
+            "added_rows_count": rows[1],
+            "existing_rows_count": rows[0],
+            "deleted_rows_count": rows[2],
+        }
+
+    def commit(self, new_mlist: list[dict], summary: dict, added_rows: int = 0) -> int:
+        """Publish the snapshot whose manifest list is ``new_mlist``.
+        On a format-version 3 table the snapshot's ``first-row-id`` is
+        the table's ``next-row-id``, which advances by ``added_rows``
+        (the rows given lineage ids by this write). Returns the new
+        snapshot id."""
+        meta = self.meta
+        snap = {
+            "snapshot-id": self.snapshot_id,
+            "sequence-number": self.seq,
+            "summary": summary,
+            # The snapshot pins the schema it was written under — after
+            # an evolve=True merge that is the freshly-committed schema.
+            "schema-id": int(meta.get("current-schema-id", 0)),
+        }
+        if self.parent_id is not None:
+            snap["parent-snapshot-id"] = self.parent_id
+        if self.fv == 3:
+            snap["first-row-id"] = self.next_row_id
+            meta = {**meta, "next-row-id": self.next_row_id + added_rows}
+        return _ice_commit_snapshot(
+            self.table_path, self.chosen, meta, new_mlist, snap
+        )
+
+
+def _ice_open(
+    table_path: str, op: str, versions: tuple[int, ...] = (2,)
+) -> _IceTxn:
+    """Open a snapshot-producing write ``op`` on the Iceberg table at
+    ``table_path``: its current metadata, refused unless its format
+    version is one of ``versions`` and it has a current snapshot."""
+    tx = _IceTxn(
+        table_path, *_iceberg_current_metadata_named(table_path), op, versions
+    )
+    if tx.parent_id is None:
+        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
+    return tx
+
+
 def _ice_retire_data_manifests(
-    manifests: list[dict],
-    retire: set[str],
-    seq: int,
-    snapshot_id: int,
-    entry_schema: dict,
-    cur_schema: dict,
-    spec_fields: list[dict],
-    mdir: str,
-    spec_id: int = 0,
-    all_specs: dict[int, dict] | None = None,
+    tx: _IceTxn, manifests: list[dict], retire: set[str]
 ) -> list[dict]:
-    """Rewrite every data manifest that references a retired file:
-    affected entries marked status-2 (original sequence numbers kept,
-    so incremental readers see exactly which files this snapshot
-    removed), the rest carried status-0; untouched manifests carry
-    forward verbatim (normalized). Returns the manifest-list records.
-
-    A manifest written under ANOTHER partition spec (native spec
-    evolution) rewrites under its ORIGINAL spec — the Iceberg spec
-    keys manifests by their own ``partition-spec-id``, so the entries'
-    partition records carry verbatim while the avro header, entry
-    schema and manifest-list record all stamp the manifest's spec, not
-    the table default (r14, closing the X147 refusal). Only a spec id
-    the table metadata no longer lists (or whose source columns the
-    current schema dropped) still refuses: its record shape cannot be
-    reconstructed."""
-    from .avro_lite import write_avro_file
-
+    """Rewrite every data manifest of ``manifests`` (as
+    ``_IceTxn.live_manifests`` returns them) that references a file in
+    ``retire``: those entries go status-2 (original sequence numbers
+    kept, so incremental readers see exactly which files this snapshot
+    removed), the rest carry status-0; untouched manifests carry forward
+    verbatim (normalized). A manifest written under another partition
+    spec (native spec evolution) rewrites under its own spec id, with
+    its entries' partition records carried verbatim. Returns the
+    manifest-list records."""
     out: list[dict] = []
     for mf in manifests:
         touched = [p in retire for p in mf["paths"]]
         if not any(touched):
             out.append(_mlist_carry(mf["rec"]))
             continue
-        mf_spec = int(mf["rec"].get("partition_spec_id") or 0)
-        w_entry_schema, w_spec_fields, w_spec = entry_schema, spec_fields, int(spec_id)
-        if mf_spec != int(spec_id):
-            spec_s = (all_specs or {}).get(mf_spec)
-            pf_s = None
-            if spec_s is not None:
-                try:
-                    pf_s = _ice_spec_part_fields(spec_s, cur_schema)
-                except (ValueError, NotImplementedError):
-                    pf_s = None
-            if pf_s is None:
-                raise NotImplementedError(
-                    f"a merge must rewrite manifest "
-                    f"{mf['rec']['manifest_path']} written under partition "
-                    f"spec {mf_spec}, which the table metadata no longer "
-                    "describes — its partition record shape cannot be "
-                    "reconstructed (compact the table with its native "
-                    "engine first)"
-                )
-            w_entry_schema, _w_mfile = _ice_manifest_schemas(pf_s)
-            w_spec_fields, w_spec = spec_s.get("fields", []), mf_spec
         rewritten = []
-        n_exist = n_del = rows_exist = rows_del = 0
-        min_seq = seq
         for e, is_aff in zip(mf["entries"], touched):
             eseq = (
                 e.get("sequence_number")
                 if e.get("sequence_number") is not None
                 else mf["rec"].get("sequence_number", 0)
             )
-            min_seq = min(min_seq, int(eseq))
-            nrec = int(e["data_file"].get("record_count", 0) or 0)
             # Resolve an inherited (explicit-null) file_sequence_number:
             # the spec only permits null on status-1 entries.
             fseq = e.get("file_sequence_number")
             rewritten.append(
                 {
                     "status": 2 if is_aff else 0,
-                    "snapshot_id": snapshot_id if is_aff else e.get("snapshot_id"),
+                    "snapshot_id": tx.snapshot_id if is_aff else e.get("snapshot_id"),
                     "sequence_number": eseq,
                     "file_sequence_number": (
                         int(fseq) if fseq is not None else int(eseq)
@@ -9445,131 +9500,44 @@ def _ice_retire_data_manifests(
                     "data_file": _ice_datafile_carry(e["data_file"]),
                 }
             )
-            if is_aff:
-                n_del += 1
-                rows_del += nrec
-            else:
-                n_exist += 1
-                rows_exist += nrec
-        mpath = os.path.join(mdir, f"{uuid.uuid4().hex}-m1.avro")
-        write_avro_file(
-            mpath, w_entry_schema, rewritten,
-            extra_meta=_ice_data_manifest_meta(
-                cur_schema, w_spec_fields, b"data", w_spec
-            ),
-        )
-        out.append(
-            {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": w_spec, "content": 0,
-                "sequence_number": seq, "min_sequence_number": min_seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": n_exist,
-                "deleted_files_count": n_del,
-                "added_rows_count": 0,
-                "existing_rows_count": rows_exist,
-                "deleted_rows_count": rows_del,
-            }
-        )
+        out.append(tx.write_manifest(rewritten, 0, mf["rec"].get("partition_spec_id")))
     return out
 
 
-def _ice_retire_delete_manifests(
-    delete_recs: list[dict],
-    table_path: str,
-    seq: int,
-    snapshot_id: int,
-    entry_schema: dict,
-    cur_schema: dict,
-    spec_fields: list[dict],
-    part_fields: list[dict],
-    mdir: str,
-    spec_id: int = 0,
-    all_specs: dict[int, dict] | None = None,
-) -> list[dict]:
-    """Retire every prior DELETE file: rewrite each delete manifest
-    with all live entries status-2 (content flag preserved), so the
-    new snapshot applies no stale deletes and incremental readers see
-    their removal. The entry schema gains a nullable equality_ids so
-    equality-delete identities survive the status-2 rewrite.
+def _ice_retire_delete_manifests(tx: _IceTxn, delete_recs: list[dict]) -> list[dict]:
+    """Retire every live DELETE file of ``delete_recs``: each delete
+    manifest holding one rewrites with all its live entries status-2
+    (content flag and equality ids preserved) under its own partition
+    spec id, so the new snapshot applies no stale deletes and
+    incremental readers see their removal. Manifests with no live entry
+    drop out. Returns the manifest-list records."""
+    from .avro_lite import read_avro_file
 
-    Like the data twin (r14), a delete manifest written under an OLD
-    spec rewrites under its OWN spec id with its own partition record
-    shape; a spec the metadata no longer lists refuses."""
-    from .avro_lite import read_avro_file, write_avro_file
-
-    def _del_schema_of(es: dict) -> dict:
-        d = json.loads(json.dumps(es))
-        d["name"] = "manifest_entry_del"
-        d["fields"][-1]["type"]["name"] = "r2d"
-        d["fields"][-1]["type"]["fields"].append(
-            {
-                "name": "equality_ids",
-                "type": ["null", {"type": "array", "items": "int",
-                                  "element-id": 136}],
-                "default": None,
-                "field-id": 135,
-            }
-        )
-        return d
-
-    del_entry_schema = _del_schema_of(entry_schema)
     out: list[dict] = []
     for r in delete_recs:
-        _s3, dentries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
+        _s, dentries = read_avro_file(
+            _iceberg_local_path(r["manifest_path"], tx.table_path)
         )
-        live_d = [e for e in dentries if e.get("status", 1) != 2]
-        if not live_d:
+        live = [e for e in dentries if e.get("status", 1) != 2]
+        if not live:
             continue
-        mf_spec = int(r.get("partition_spec_id") or 0)
-        w_schema, w_fields, w_part_fields, w_spec = (
-            del_entry_schema, spec_fields, part_fields, int(spec_id)
-        )
-        if mf_spec != int(spec_id):
-            spec_s = (all_specs or {}).get(mf_spec)
-            pf_s = None
-            if spec_s is not None:
-                try:
-                    pf_s = _ice_spec_part_fields(spec_s, cur_schema)
-                except (ValueError, NotImplementedError):
-                    pf_s = None
-            if pf_s is None:
-                raise NotImplementedError(
-                    f"a merge must retire delete manifest "
-                    f"{r['manifest_path']} written under partition spec "
-                    f"{mf_spec}, which the table metadata no longer "
-                    "describes — its partition record shape cannot be "
-                    "reconstructed (compact the table with its native "
-                    "engine first)"
-                )
-            es_s, _mf_s = _ice_manifest_schemas(pf_s)
-            w_schema = _del_schema_of(es_s)
-            w_fields, w_part_fields, w_spec = (
-                spec_s.get("fields", []), pf_s, mf_spec
-            )
+        spec_id = int(r.get("partition_spec_id") or 0)
+        part_fields, _spec_fields = tx.spec_parts(spec_id)
         retired = []
-        n_rows = 0
-        min_seq = seq
-        for e in live_d:
+        for e in live:
             eseq = (
                 e.get("sequence_number")
                 if e.get("sequence_number") is not None
                 else r.get("sequence_number", 0)
             )
-            min_seq = min(min_seq, int(eseq))
             dfr = e["data_file"]
-            nrec = int(dfr.get("record_count", 0) or 0)
-            n_rows += nrec
             # Explicit-null file_sequence_number (inheritance shape)
             # resolves to the entry/manifest sequence.
             fseq = e.get("file_sequence_number")
             retired.append(
                 {
                     "status": 2,
-                    "snapshot_id": snapshot_id,
+                    "snapshot_id": tx.snapshot_id,
                     "sequence_number": eseq,
                     "file_sequence_number": (
                         int(fseq) if fseq is not None else int(eseq)
@@ -9580,9 +9548,9 @@ def _ice_retire_delete_manifests(
                         "file_format": dfr.get("file_format", "PARQUET"),
                         "partition": {
                             pf["name"]: (dfr.get("partition") or {}).get(pf["name"])
-                            for pf in w_part_fields
+                            for pf in part_fields
                         },
-                        "record_count": nrec,
+                        "record_count": int(dfr.get("record_count", 0) or 0),
                         "file_size_in_bytes": int(
                             dfr.get("file_size_in_bytes", 0) or 0
                         ),
@@ -9590,61 +9558,36 @@ def _ice_retire_delete_manifests(
                     },
                 }
             )
-        mpath = os.path.join(mdir, f"{uuid.uuid4().hex}-m2.avro")
-        write_avro_file(
-            mpath, w_schema, retired,
-            extra_meta=_ice_data_manifest_meta(
-                cur_schema, w_fields, b"deletes", w_spec
-            ),
-        )
-        out.append(
-            {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": w_spec, "content": 1,
-                "sequence_number": seq, "min_sequence_number": min_seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": 0,
-                "deleted_files_count": len(retired),
-                "added_rows_count": 0,
-                "existing_rows_count": 0,
-                "deleted_rows_count": n_rows,
-            }
-        )
+        out.append(tx.write_manifest(retired, 1, spec_id))
     return out
 
 
 def _ice_add_data_manifest(
+    tx: _IceTxn,
     staged: list[tuple],
-    part_fields: list[dict],
-    entry_schema: dict,
-    cur_schema: dict,
-    spec_fields: list[dict],
-    mdir: str,
-    snapshot_id: int,
-    seq: int,
-    spec_id: int = 0,
-) -> tuple[dict | None, int]:
-    """One ADDED-data manifest for the staged parquet files. Returns
-    (manifest-list record or None when nothing staged, file count)."""
-    from .avro_lite import write_avro_file
-
-    added_rows = 0
-    add_entries = []
+    file_format: str = "parquet",
+    row_ids: bool = False,
+) -> tuple[list[dict], int]:
+    """One ADDED-data manifest for the staged data files, under the
+    table's default spec. ``row_ids`` on a format-version 3 table gives
+    each file row-lineage ``first_row_id``s counted from the table's
+    ``next-row-id``; the commit then passes the added rows on. Returns
+    ([its manifest-list record], or [] when nothing staged; the file
+    count)."""
+    entries = []
+    first_row_id = tx.next_row_id
     for apath, pv, nrec, size, bounds in staged:
-        added_rows += nrec
         lowers, uppers, nulls = bounds
-        add_entries.append(
+        entries.append(
             {
-                "status": 1, "snapshot_id": snapshot_id,
-                "sequence_number": seq, "file_sequence_number": seq,
+                "status": 1, "snapshot_id": tx.snapshot_id,
+                "sequence_number": tx.seq, "file_sequence_number": tx.seq,
                 "data_file": {
                     "content": 0, "file_path": f"file://{apath}",
-                    "file_format": "PARQUET",
+                    "file_format": file_format.upper(),
                     "partition": {
                         pf["name"]: _ice_part_value(pf["ice_type"], pv.get(pf["name"]))
-                        for pf in part_fields
+                        for pf in tx.part_fields
                     },
                     "record_count": nrec, "file_size_in_bytes": size,
                     "lower_bounds": lowers or None,
@@ -9653,29 +9596,12 @@ def _ice_add_data_manifest(
                 },
             }
         )
-    if not add_entries:
-        return None, 0
-    mpath = os.path.join(mdir, f"{uuid.uuid4().hex}-m0.avro")
-    write_avro_file(
-        mpath, entry_schema, add_entries,
-        extra_meta=_ice_data_manifest_meta(
-            cur_schema, spec_fields, b"data", spec_id
-        ),
-    )
-    return (
-        {
-            "manifest_path": f"file://{mpath}",
-            "manifest_length": os.path.getsize(mpath),
-            "partition_spec_id": int(spec_id), "content": 0,
-            "sequence_number": seq, "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(add_entries),
-            "existing_files_count": 0, "deleted_files_count": 0,
-            "added_rows_count": added_rows,
-            "existing_rows_count": 0, "deleted_rows_count": 0,
-        },
-        len(add_entries),
-    )
+        if row_ids and tx.fv == 3:
+            entries[-1]["data_file"]["first_row_id"] = first_row_id
+            first_row_id += nrec
+    if not entries:
+        return [], 0
+    return [tx.write_manifest(entries, 0, tx.spec_id)], len(entries)
 
 
 def _ice_manifest_schemas(
@@ -10821,10 +10747,11 @@ def write_iceberg(
     the Hadoop-catalog convention (``version-hint.text`` updated
     last). Modes: ``error`` (create), ``append`` (carries the previous
     snapshot's manifests forward in the new manifest list),
-    ``overwrite`` (the new manifest list holds the new manifest plus a
-    DELETE-MARKING manifest recording every removed file as a status-2
-    entry — snapshot readers skip them, incremental readers see
-    exactly what the snapshot removed). Returns the new snapshot id.
+    ``overwrite`` (every live data and delete file retires status-2,
+    as in ``truncate_iceberg`` — snapshot readers skip them,
+    incremental readers see exactly what the snapshot removed). Every
+    mode commits through the one Iceberg transaction (``_IceTxn``).
+    Returns the new snapshot id.
 
     Hidden partitioning: a ``partition_by`` entry may be a transform —
     ``"days(ts)"`` / ``"months(ts)"`` / ``"years(ts)"`` /
@@ -10854,10 +10781,8 @@ def write_iceberg(
 
     ice_schema, last_col_id = _ice_schema_from_spark(df.schema)
     field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
-    field_types = {f["name"]: f["type"] for f in ice_schema["fields"]}
-    part_fields = []
+    spec_fields = []
     for i, (src_col, transform, pname) in enumerate(parsed_parts):
-        src_t = field_types[src_col]
         pf = {
             "name": pname, "source-id": field_ids[src_col],
             "transform": transform, "field-id": _ICE_PART_FIELD_ID0 + i,
@@ -10869,57 +10794,25 @@ def write_iceberg(
                 f"Iceberg type {ice_t!r}, which is not supported "
                 "(string/int/long/date only)"
             )
-        part_fields.append(
-            {**pf, "ice_type": ice_t, "src": src_col, "src_ice_type": src_t}
-        )
-    spec_fields = [
-        {k: v for k, v in pf.items()
-         if k not in ("ice_type", "src", "src_ice_type")}
-        for pf in part_fields
-    ]
+        spec_fields.append(pf)
 
-    now_ms = int(time.time() * 1000)
-    prev_mlist_records: list[dict] = []
-    table_fv = 2
-    next_row_id = 0
     if exists:
-        chosen, meta = _iceberg_current_metadata_named(table_path)
-        table_fv = int(meta.get("format-version", 1))
-        if table_fv not in (2, 3):
-            raise NotImplementedError(
-                f"appending to a format-version {table_fv} Iceberg table "
-                "is not supported (v2 and v3 only; v1: run "
-                "upgrade_iceberg_v1_to_v2 first)"
-            )
-        # v3 (r17): new data files get row-lineage first_row_id
-        # assigned from the table's next-row-id counter.
-        next_row_id = int(meta.get("next-row-id", 0))
-        cur_schema = None
-        for s in meta.get("schemas", []):
-            if s.get("schema-id") == meta.get("current-schema-id"):
-                cur_schema = s
-        if cur_schema is None:
-            raise ValueError(f"Iceberg metadata at {table_path} has no schema")
-        declared = [(f["name"], f["type"]) for f in cur_schema["fields"]]
+        tx = _IceTxn(
+            table_path, *_iceberg_current_metadata_named(table_path),
+            f"write_iceberg(mode={mode!r})", (2, 3),
+        )
+        declared = [(f["name"], f["type"]) for f in tx.cur_schema["fields"]]
         ours = [(f["name"], f["type"]) for f in ice_schema["fields"]]
         if declared != ours:
             raise ValueError(
                 f"schema mismatch: table declares {declared}, batch is {ours}"
             )
-        # Reuse the table's ids/spec verbatim.
-        ice_schema = cur_schema
-        last_col_id = int(meta.get("last-column-id", last_col_id))
-        spec = next(
-            (
-                s for s in meta.get("partition-specs", [])
-                if s.get("spec-id") == meta.get("default-spec-id")
-            ),
-            None,
-        )
-        by_id = {f["id"]: f["name"] for f in cur_schema["fields"]}
+        # The table's schema and spec are authoritative: their field ids
+        # and names survive.
+        by_id = {f["id"]: f["name"] for f in tx.cur_schema["fields"]}
         declared_parts = [
             (by_id.get(f.get("source-id")), _ice_norm_transform(f.get("transform")))
-            for f in (spec or {}).get("fields", [])
+            for f in tx.spec_fields
         ]
         requested = [
             (src, _ice_norm_transform(t)) for src, t, _n in parsed_parts
@@ -10929,309 +10822,75 @@ def write_iceberg(
                 f"table partition spec is {declared_parts}, write asked for "
                 f"{requested}"
             )
-        if spec is not None:
-            # The table's spec is authoritative (its field-ids/names
-            # survive); re-enrich for staging.
-            part_fields = _ice_spec_part_fields(spec, cur_schema)
-            spec_fields = spec.get("fields", spec_fields)
-        if meta.get("current-snapshot-id") not in (None, -1):
-            # append: carried forward in the new manifest list.
-            # overwrite: rewritten as a DELETE-MARKING manifest below.
-            snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-            cur_snap = snaps.get(meta["current-snapshot-id"])
-            if cur_snap and "manifest-list" in cur_snap:
-                from .avro_lite import read_avro_file
-
-                _s, prev_mlist_records = read_avro_file(
-                    _iceberg_local_path(cur_snap["manifest-list"], table_path)
-                )
-        last_seq = int(meta.get("last-sequence-number", 0))
-        table_uuid = meta.get("table-uuid") or str(uuid.uuid4())
-        prev_snapshots = list(meta.get("snapshots", []))
-        prev_snap_log = list(meta.get("snapshot-log", []))
-        parent_id = meta.get("current-snapshot-id")
-        if parent_id in (None, -1):
-            parent_id = None
-        location = meta.get("location") or table_path
-        # Carry the table's REAL schema/spec registry (late-r14: the
-        # pre-fix tail hardcoded create-time values — an append to a
-        # schema- or spec-EVOLVED table collapsed `schemas` to one
-        # entry while pointing current-schema-id at an id no longer
-        # listed, corrupting the metadata for every reader; found by
-        # the alter_iceberg_table + append streaming gate).
-        carry = {
-            "current-schema-id": int(meta.get("current-schema-id", 0)),
-            "schemas": list(meta.get("schemas", [])) or [ice_schema],
-            "default-spec-id": int(meta.get("default-spec-id", 0)),
-            "partition-specs": list(meta.get("partition-specs", []))
-            or [{"spec-id": 0, "fields": spec_fields}],
-            "last-partition-id": int(
-                meta.get("last-partition-id")
-                or (
-                    _ICE_PART_FIELD_ID0 + len(spec_fields) - 1
-                    if spec_fields
-                    else _ICE_PART_FIELD_ID0 - 1
-                )
-            ),
-            "default-sort-order-id": int(meta.get("default-sort-order-id", 0)),
-            "sort-orders": list(meta.get("sort-orders", []))
-            or [{"order-id": 0, "fields": []}],
-            "properties": dict(
-                meta.get("properties") or {"write.format.default": "parquet"}
-            ),
-        }
     else:
         os.makedirs(mdir, exist_ok=True)
-        chosen, meta = None, {}
-        last_seq = 0
-        table_uuid = str(uuid.uuid4())
-        prev_snapshots, prev_snap_log = [], []
-        parent_id = None
-        location = table_path
-        carry = None
-
-    cur_spec_id = (
-        int(meta.get("default-spec-id") or 0) if exists else 0
-    )
-    staged = _iceberg_stage_files(
-        df, table_path, part_fields,
-        bounds_fields=_ice_schema_bounds_fields(ice_schema),
-        count_fields=_ice_schema_count_fields(ice_schema),
-        file_format=file_format,
-        field_ids=field_ids,
-    )
-    snapshot_id = uuid.uuid4().int >> 65  # 63-bit positive long
-    seq = last_seq + 1
-
-    entry_schema, mlist_schema = _ice_manifest_schemas(
-        part_fields, v3=table_fv == 3
-    )
-    entries = []
-    added_rows = 0
-    for apath, pv, nrec, size, bounds in staged:
-        lowers, uppers, nulls = bounds
-        dfile = {
-            "content": 0,
-            "file_path": f"file://{apath}",
-            "file_format": file_format.upper(),
-            "partition": {
-                pf["name"]: _ice_part_value(pf["ice_type"], pv.get(pf["name"]))
-                for pf in part_fields
+        tx = _IceTxn(
+            table_path, None,
+            {
+                "format-version": 2,
+                "table-uuid": str(uuid.uuid4()),
+                "location": table_path,
+                "last-sequence-number": 0,
+                "last-column-id": last_col_id,
+                "current-schema-id": 0,
+                "schemas": [ice_schema],
+                "default-spec-id": 0,
+                "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
+                "last-partition-id": _ICE_PART_FIELD_ID0 + len(spec_fields) - 1,
+                "default-sort-order-id": 0,
+                "sort-orders": [{"order-id": 0, "fields": []}],
+                "properties": {"write.format.default": file_format.lower()},
             },
-            "record_count": nrec,
-            "file_size_in_bytes": size,
-            "lower_bounds": lowers or None,
-            "upper_bounds": uppers or None,
-            "null_value_counts": nulls or None,
-        }
-        if table_fv == 3:
-            dfile["first_row_id"] = next_row_id + added_rows
-        added_rows += nrec
-        entries.append(
-            {
-                "status": 1, "snapshot_id": snapshot_id,
-                "sequence_number": seq, "file_sequence_number": seq,
-                "data_file": dfile,
-            }
+            "write_iceberg", (2,),
         )
-    from .avro_lite import write_avro_file
-
-    manifest_name = f"{uuid.uuid4().hex}-m0.avro"
-    manifest_abs = os.path.join(mdir, manifest_name)
-    write_avro_file(
-        manifest_abs, entry_schema, entries,
-        extra_meta={
-            "schema": json.dumps(ice_schema).encode("utf-8"),
-            "schema-id": str(ice_schema.get("schema-id", 0)).encode("utf-8"),
-            "partition-spec": json.dumps(spec_fields).encode("utf-8"),
-            "partition-spec-id": str(cur_spec_id).encode("ascii"),
-            "format-version": str(table_fv).encode("ascii"),
-            "content": b"data",
-        },
-    )
-    new_mlist_rec = {
-        "manifest_path": f"file://{manifest_abs}",
-        "manifest_length": os.path.getsize(manifest_abs),
-        "partition_spec_id": cur_spec_id,
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": added_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    deletion_mlist_recs = []
-    if mode == "overwrite" and prev_mlist_records:
-        # Spec fidelity for incremental readers: the files the
-        # overwrite logically removed are recorded as STATUS-2
-        # (deleted) entries in a delete-marking DATA manifest — a
-        # snapshot reader skips them (status 2), an incremental reader
-        # sees exactly what this snapshot removed.
-        from .avro_lite import read_avro_file
-
-        deleted_entries = []
-        del_rows = 0
-        for r in prev_mlist_records:
-            if r.get("content", 0) != 0:
-                continue  # old delete manifests: their targets die here
-            _s, prev_entries = read_avro_file(
-                _iceberg_local_path(r["manifest_path"], table_path)
-            )
-            for e in prev_entries:
-                if e.get("status", 1) == 2:
-                    continue
-                prev_seq = (
-                    e.get("sequence_number")
-                    if e.get("sequence_number") is not None
-                    else r.get("sequence_number", 0)
-                )
-                del_rows += int(e["data_file"].get("record_count", 0) or 0)
-                deleted_entries.append(
-                    {
-                        "status": 2,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": prev_seq,
-                        "file_sequence_number": prev_seq,
-                        "data_file": e["data_file"],
-                    }
-                )
-        if deleted_entries:
-            dmanifest_abs = os.path.join(mdir, f"{uuid.uuid4().hex}-d0.avro")
-            write_avro_file(
-                dmanifest_abs, entry_schema, deleted_entries,
-                extra_meta={
-                    "schema": json.dumps(ice_schema).encode("utf-8"),
-                    "schema-id": str(ice_schema.get("schema-id", 0)).encode(
-                        "utf-8"
-                    ),
-                    "partition-spec": json.dumps(spec_fields).encode("utf-8"),
-                    "partition-spec-id": str(cur_spec_id).encode("ascii"),
-                    "format-version": str(table_fv).encode("ascii"),
-                    "content": b"data",
-                },
-            )
-            deletion_mlist_recs.append(
-                {
-                    "manifest_path": f"file://{dmanifest_abs}",
-                    "manifest_length": os.path.getsize(dmanifest_abs),
-                    "partition_spec_id": cur_spec_id,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": min(
-                        int(e["sequence_number"]) for e in deleted_entries
-                    ),
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": 0,
-                    "existing_files_count": 0,
-                    "deleted_files_count": len(deleted_entries),
-                    "added_rows_count": 0,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": del_rows,
-                }
-            )
-
-    carried = []
-    for r in [] if mode == "overwrite" else prev_mlist_records:
-        carried.append(
-            {
-                "manifest_path": r["manifest_path"],
-                "manifest_length": r.get("manifest_length", 0),
-                "partition_spec_id": r.get("partition_spec_id", 0),
-                "content": r.get("content", 0),
-                "sequence_number": r.get("sequence_number", 0),
-                "min_sequence_number": r.get("min_sequence_number", 0),
-                "added_snapshot_id": r.get("added_snapshot_id", 0),
-                "added_files_count": r.get(
-                    "added_files_count", r.get("added_data_files_count", 0) or 0
-                ),
-                "existing_files_count": r.get(
-                    "existing_files_count", r.get("existing_data_files_count", 0) or 0
-                ),
-                "deleted_files_count": r.get(
-                    "deleted_files_count", r.get("deleted_data_files_count", 0) or 0
-                ),
-                "added_rows_count": r.get(
-                    "added_rows_count", r.get("added_data_rows_count", 0) or 0
-                ),
-                "existing_rows_count": r.get(
-                    "existing_rows_count", r.get("existing_data_rows_count", 0) or 0
-                ),
-                "deleted_rows_count": r.get(
-                    "deleted_rows_count", r.get("deleted_data_rows_count", 0) or 0
-                ),
-            }
-        )
-    mlist_name = f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
-    mlist_abs = os.path.join(mdir, mlist_name)
-    write_avro_file(
-        mlist_abs, mlist_schema, [new_mlist_rec] + deletion_mlist_recs + carried
-    )
-
-    snap = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": f"file://{mlist_abs}",
-        "summary": {
-            "operation": "append" if mode != "overwrite" else "overwrite",
-            "added-data-files": str(len(entries)),
-            "added-records": str(added_rows),
-        },
-        "schema-id": (carry or {}).get("current-schema-id", 0),
-    }
-    if table_fv == 3:
-        snap["first-row-id"] = next_row_id
-    if parent_id is not None:
-        snap["parent-snapshot-id"] = parent_id
-    registry = carry or {
-        "current-schema-id": 0,
-        "schemas": [ice_schema],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "last-partition-id": (
-            _ICE_PART_FIELD_ID0 + len(spec_fields) - 1
-            if spec_fields
-            else _ICE_PART_FIELD_ID0 - 1
-        ),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {"write.format.default": file_format.lower()},
-    }
     if file_format.upper() != "PARQUET":
         # Native readers resolve ORC/Avro data-file columns by field-id
         # (no positional fallback like parquet) — the spec's
         # name-mapping property supplies ids for files that lack them
         # (review finding, r16). Avro files additionally embed
         # field-ids directly (_ice_avro_datafile_schema).
-        registry.setdefault("properties", {})[
-            "schema.name-mapping.default"
-        ] = json.dumps(
-            [
-                {"field-id": f["id"], "names": [f["name"]]}
-                for f in ice_schema["fields"]
-            ]
+        tx.meta = {
+            **tx.meta,
+            "properties": {
+                **(tx.meta.get("properties") or {}),
+                "schema.name-mapping.default": json.dumps(
+                    [
+                        {"field-id": f["id"], "names": [f["name"]]}
+                        for f in tx.cur_schema["fields"]
+                    ]
+                ),
+            },
+        }
+
+    staged = _iceberg_stage_files(
+        df, table_path, tx.part_fields,
+        bounds_fields=_ice_schema_bounds_fields(tx.cur_schema),
+        count_fields=_ice_schema_count_fields(tx.cur_schema),
+        file_format=file_format,
+        field_ids=field_ids,
+    )
+    new_mlist, n_files = _ice_add_data_manifest(
+        tx, staged, file_format, row_ids=True
+    )
+    added_rows = sum(nrec for _p, _pv, nrec, _sz, _b in staged)
+    if mode == "overwrite":
+        # Every live data and delete file retires status-2 (truncate's
+        # path): snapshot readers skip them, incremental readers see
+        # exactly what this snapshot removed. Prior snapshots stay
+        # listed, so time travel to them still works.
+        manifests = tx.live_manifests()
+        new_mlist += _ice_retire_data_manifests(
+            tx, manifests, {p for mf in manifests for p in mf["paths"]}
         )
-    new_meta = {
-        "format-version": table_fv,
-        "table-uuid": table_uuid,
-        "location": location,
-        "last-sequence-number": seq,
-        "last-column-id": last_col_id,
-        **({"next-row-id": next_row_id + added_rows} if table_fv == 3 else {}),
-        **registry,
-        "current-snapshot-id": snapshot_id,
-        # Overwrite keeps prior snapshots listed: their manifest lists
-        # stay on disk, so time travel to them still works.
-        "snapshots": prev_snapshots + [snap],
-        "snapshot-log": prev_snap_log
-        + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}],
+        new_mlist += _ice_retire_delete_manifests(tx, tx.delete_recs)
+    else:
+        new_mlist += [_mlist_carry(r) for r in tx.mlist_records]
+    summary = {
+        "operation": "append" if mode != "overwrite" else "overwrite",
+        "added-data-files": str(n_files),
+        "added-records": str(added_rows),
     }
-    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
-    return snapshot_id
+    return tx.commit(new_mlist, summary, added_rows)
 
 
 def _ice_append_chain(
@@ -11638,36 +11297,15 @@ def write_iceberg_equality_deletes(
     key_cols = [keys] if isinstance(keys, str) else list(keys)
     if not key_cols:
         raise ValueError("keys must name at least one column")
-    spark = source.sparkSession
-    from .avro_lite import read_avro_file, write_avro_file
-
-    chosen, meta = _iceberg_current_metadata_named(table_path)
-    eq_fv = int(meta.get("format-version", 1))
-    if eq_fv not in (2, 3):
-        raise NotImplementedError(
-            "equality deletes demand an Iceberg format-version 2 or 3 "
-            "table (they remain legal in v3)"
-        )
-    cur_schema = next(
-        s for s in meta.get("schemas", [])
-        if s.get("schema-id") == meta.get("current-schema-id")
-    )
-    field_ids = {f["name"]: int(f["id"]) for f in cur_schema["fields"]}
-    field_types = {f["name"]: f["type"] for f in cur_schema["fields"]}
+    tx = _ice_open(table_path, "write_iceberg_equality_deletes", (2, 3))
+    field_ids = {f["name"]: int(f["id"]) for f in tx.cur_schema["fields"]}
     unknown = [k for k in key_cols if k not in field_ids]
     if unknown:
         raise ValueError(f"keys {unknown} are not table columns")
-    spec = next(
-        (
-            s for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id")
-        ),
-        {"fields": []},
-    )
     # Transformed specs (days()/bucket[N]/...) stage like identity
     # ones: the transform evaluates on the SOURCE column per delete
     # row, so the batch must carry the spec's source columns.
-    part_fields = _ice_spec_part_fields(spec, cur_schema)
+    part_fields = tx.part_fields
     need = key_cols + [
         pf["src"] for pf in part_fields if pf["src"] not in key_cols
     ]
@@ -11677,31 +11315,6 @@ def write_iceberg_equality_deletes(
             f"delete source lacks columns {missing} (partitioned tables "
             "need the partition SOURCE columns to place each delete file)"
         )
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    if sid in (None, -1) or sid not in snaps:
-        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
-    _s, mlist_records = read_avro_file(
-        _iceberg_local_path(snaps[sid]["manifest-list"], table_path)
-    )
-    spec_fields = spec.get("fields", [])
-    entry_schema, mlist_schema = _ice_manifest_schemas(
-        part_fields, v3=eq_fv == 3
-    )
-    # data_file gains equality_ids (field-id 135) — same shape the
-    # retire path preserves.
-    del_entry_schema = json.loads(json.dumps(entry_schema))
-    del_entry_schema["name"] = "manifest_entry_eqd"
-    del_entry_schema["fields"][-1]["type"]["name"] = "r2eq"
-    del_entry_schema["fields"][-1]["type"]["fields"].append(
-        {
-            "name": "equality_ids",
-            "type": ["null", {"type": "array", "items": "int",
-                              "element-id": 136}],
-            "default": None,
-            "field-id": 135,
-        }
-    )
 
     # Field-id-stamped delete rows: Spark writes parquet field ids from
     # column metadata (fieldId.write is on by default), so foreign
@@ -11710,72 +11323,35 @@ def write_iceberg_equality_deletes(
     for c in need:
         sel = sel.withMetadata(c, {"parquet.field.id": field_ids[c]})
 
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int >> 65
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    mdir = os.path.join(table_path, "metadata")
     staged = _iceberg_stage_files(sel, table_path, part_fields)
     eq_ids = [field_ids[k] for k in key_cols]
-    del_entries = []
-    deleted_rows = 0
-    for apath, pv, nrec, size, _bounds in staged:
-        deleted_rows += nrec
-        del_entries.append(
-            {
-                "status": 1, "snapshot_id": snapshot_id,
-                "sequence_number": seq, "file_sequence_number": seq,
-                "data_file": {
-                    "content": 2, "file_path": f"file://{apath}",
-                    "file_format": "PARQUET",
-                    "partition": {
-                        pf["name"]: _ice_part_value(
-                            pf["ice_type"], pv.get(pf["name"])
-                        )
-                        for pf in part_fields
-                    },
-                    "record_count": nrec, "file_size_in_bytes": size,
-                    "equality_ids": eq_ids,
-                },
-            }
-        )
-    if not del_entries:
-        return sid  # empty batch: no-op, current snapshot stands
-    cur_spec_id = int(meta.get("default-spec-id") or 0)
-    mpath = os.path.join(mdir, f"{uuid.uuid4().hex}-m0eq.avro")
-    write_avro_file(
-        mpath, del_entry_schema, del_entries,
-        extra_meta=_ice_data_manifest_meta(
-            cur_schema, spec_fields, b"deletes", cur_spec_id, fv=eq_fv
-        ),
-    )
-    new_mlist = [
+    del_entries = [
         {
-            "manifest_path": f"file://{mpath}",
-            "manifest_length": os.path.getsize(mpath),
-            "partition_spec_id": cur_spec_id, "content": 1,
-            "sequence_number": seq, "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(del_entries),
-            "existing_files_count": 0, "deleted_files_count": 0,
-            "added_rows_count": deleted_rows,
-            "existing_rows_count": 0, "deleted_rows_count": 0,
+            "status": 1, "snapshot_id": tx.snapshot_id,
+            "sequence_number": tx.seq, "file_sequence_number": tx.seq,
+            "data_file": {
+                "content": 2, "file_path": f"file://{apath}",
+                "file_format": "PARQUET",
+                "partition": {
+                    pf["name"]: _ice_part_value(pf["ice_type"], pv.get(pf["name"]))
+                    for pf in part_fields
+                },
+                "record_count": nrec, "file_size_in_bytes": size,
+                "equality_ids": eq_ids,
+            },
         }
+        for apath, pv, nrec, size, _bounds in staged
     ]
-    new_mlist.extend(_mlist_carry(r) for r in mlist_records)
-    summary = {
-        "operation": "delete",
-        "added-delete-files": str(len(del_entries)),
-        "added-equality-deletes": str(deleted_rows),
-    }
-    eq_extra = eq_meta_up = None
-    if eq_fv == 3:
-        nri = int(meta.get("next-row-id", 0))
-        eq_extra = {"first-row-id": nri}
-        eq_meta_up = {"next-row-id": nri}
-    return _ice_commit_snapshot(
-        table_path, chosen, meta, mlist_schema, new_mlist,
-        snapshot_id, sid, seq, now_ms, summary,
-        extra_snapshot=eq_extra, meta_updates=eq_meta_up,
+    if not del_entries:
+        return tx.parent_id  # empty batch: no-op, current snapshot stands
+    rec = tx.write_manifest(del_entries, 1, tx.spec_id)
+    return tx.commit(
+        [rec] + [_mlist_carry(r) for r in tx.mlist_records],
+        {
+            "operation": "delete",
+            "added-delete-files": str(len(del_entries)),
+            "added-equality-deletes": str(rec["added_rows_count"]),
+        },
     )
 
 
@@ -11817,45 +11393,21 @@ def write_iceberg_deletion_vectors(
         raise ValueError("keys must name at least one column")
     spark = source.sparkSession
     from . import puffin as _puffin
-    from .avro_lite import read_avro_file, write_avro_file
+    from .avro_lite import read_avro_file
 
-    chosen, meta = _iceberg_current_metadata_named(table_path)
-    if int(meta.get("format-version", 1)) != 3:
-        raise NotImplementedError(
-            "deletion vectors demand an Iceberg format-version 3 table; "
-            "run upgrade_iceberg_v2_to_v3 first (v2 tables take the "
-            "same deletes as merge_iceberg position deletes)"
-        )
-    cur_schema = next(
-        s for s in meta.get("schemas", [])
-        if s.get("schema-id") == meta.get("current-schema-id")
-    )
-    known = {f["name"] for f in cur_schema["fields"]}
+    tx = _ice_open(table_path, "write_iceberg_deletion_vectors", (3,))
+    known = {f["name"] for f in tx.cur_schema["fields"]}
     unknown = [k for k in key_cols if k not in known]
     if unknown:
         raise ValueError(f"keys {unknown} are not table columns")
-    spec = next(
-        (
-            s for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id")
-        ),
-        {"fields": []},
-    )
-    if spec.get("fields"):
+    if tx.spec_fields:
         raise NotImplementedError(
             "deletion-vector writes on a PARTITIONED Iceberg table are "
             "not supported yet (each DV entry must carry its referenced "
             "file's partition record); use the native engine"
         )
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    if sid in (None, -1) or sid not in snaps:
-        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
-    _s, mlist_records = read_avro_file(
-        _iceberg_local_path(snaps[sid]["manifest-list"], table_path)
-    )
     files, pos_files, eq_dels, dvs = _ice_snapshot_files_and_deletes(
-        table_path, meta, sid
+        table_path, tx.meta, tx.parent_id
     )
     if pos_files:
         raise ValueError(
@@ -11863,12 +11415,11 @@ def write_iceberg_deletion_vectors(
             "the v3 spec; rewrite with the native engine"
         )
     if not files:
-        return sid
-    schema = _iceberg_table_schema(meta)
+        return tx.parent_id
     scan = _ice_scan_with_deletes(
-        spark, meta, table_path,
+        spark, tx.meta, table_path,
         [(p, s, f) for p, (s, f) in sorted(files.items())],
-        [], eq_dels, schema, keep_path=True, dvs=dvs, keep_pos=True,
+        [], eq_dels, tx.schema, keep_path=True, dvs=dvs, keep_pos=True,
     )
     keys_side, keys_pin = _pin_gated(source.select(*key_cols).distinct())
     try:
@@ -11887,7 +11438,7 @@ def write_iceberg_deletion_vectors(
             "raise the budget"
         )
     if not matched:
-        return sid
+        return tx.parent_id
     by_file: dict[str, list[int]] = {}
     for r in matched:
         by_file.setdefault(os.path.abspath(r["__fp"]), []).append(int(r["__ri"]))
@@ -11904,28 +11455,19 @@ def write_iceberg_deletion_vectors(
             )
             superseded.add(fp)
 
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int >> 65
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    next_row_id = int(meta.get("next-row-id", 0))
-    mdir = os.path.join(table_path, "metadata")
     ddir = os.path.join(table_path, "data")
     os.makedirs(ddir, exist_ok=True)
     ppath_new = os.path.join(ddir, f"{uuid.uuid4().hex}-dv.puffin")
     refs = _puffin.write_puffin_dvs(
         ppath_new,
         {f"file://{fp}": pos for fp, pos in by_file.items()},
-        snapshot_id=snapshot_id, sequence_number=seq,
+        snapshot_id=tx.snapshot_id, sequence_number=tx.seq,
     )
     psize = os.path.getsize(ppath_new)
-    spec_fields = spec.get("fields", [])
-    cur_spec_id = int(meta.get("default-spec-id") or 0)
-    entry_schema, mlist_schema = _ice_manifest_schemas([], v3=True)
-    new_positions = sum(len(v) for v in by_file.values())
     del_entries = [
         {
-            "status": 1, "snapshot_id": snapshot_id,
-            "sequence_number": seq, "file_sequence_number": seq,
+            "status": 1, "snapshot_id": tx.snapshot_id,
+            "sequence_number": tx.seq, "file_sequence_number": tx.seq,
             "data_file": {
                 "content": 1, "file_path": f"file://{ppath_new}",
                 "file_format": "PUFFIN", "partition": {},
@@ -11936,39 +11478,19 @@ def write_iceberg_deletion_vectors(
         }
         for ref, (off, sz, card) in sorted(refs.items())
     ]
-    mpath = os.path.join(mdir, f"{uuid.uuid4().hex}-m0dv.avro")
-    write_avro_file(
-        mpath, entry_schema, del_entries,
-        extra_meta=_ice_data_manifest_meta(
-            cur_schema, spec_fields, b"deletes", cur_spec_id, fv=3
-        ),
-    )
-    new_mlist = [
-        {
-            "manifest_path": f"file://{mpath}",
-            "manifest_length": os.path.getsize(mpath),
-            "partition_spec_id": cur_spec_id, "content": 1,
-            "sequence_number": seq, "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(del_entries),
-            "existing_files_count": 0, "deleted_files_count": 0,
-            "added_rows_count": new_positions,
-            "existing_rows_count": 0, "deleted_rows_count": 0,
-        }
-    ]
+    new_mlist = [tx.write_manifest(del_entries, 1, tx.spec_id)]
     removed_dvs = 0
-    for r in mlist_records:
+    for r in tx.mlist_records:
         if int(r.get("content", 0) or 0) != 1 or not superseded:
             new_mlist.append(_mlist_carry(r))
             continue
         # Delete manifest: rewrite if it holds a superseded DV entry.
-        local = _iceberg_local_path(r["manifest_path"], table_path)
-        _es, entries = read_avro_file(local)
+        _es, entries = read_avro_file(
+            _iceberg_local_path(r["manifest_path"], table_path)
+        )
         mseq = int(r.get("sequence_number") or 0)
-        hit = False
         out_entries = []
-        kept_rows = 0
-        dead_rows = 0
+        hits = 0
         for e in entries:
             dfr = e["data_file"]
             eseq = e.get("sequence_number")
@@ -11983,65 +11505,29 @@ def write_iceberg_deletion_vectors(
                     )
                 ) in superseded
             )
-            status = 2 if is_sup else (0 if e.get("status", 1) != 2 else 2)
-            if is_sup:
-                hit = True
-                removed_dvs += 1
-                dead_rows += int(dfr.get("record_count", 0) or 0)
-            elif status == 0:
-                kept_rows += int(dfr.get("record_count", 0) or 0)
+            hits += is_sup
             out_entries.append(
                 {
-                    "status": status, "snapshot_id": e.get("snapshot_id"),
+                    "status": 2 if is_sup or e.get("status", 1) == 2 else 0,
+                    "snapshot_id": e.get("snapshot_id"),
                     "sequence_number": eseq, "file_sequence_number": eseq,
                     "data_file": dfr,
                 }
             )
-        if not hit:
+        if not hits:
             new_mlist.append(_mlist_carry(r))
             continue
-        rpath = os.path.join(mdir, f"{uuid.uuid4().hex}-mdvrw.avro")
-        write_avro_file(
-            rpath, entry_schema, out_entries,
-            extra_meta=_ice_data_manifest_meta(
-                cur_schema, spec_fields, b"deletes", cur_spec_id, fv=3
-            ),
-        )
+        removed_dvs += hits
         new_mlist.append(
-            {
-                "manifest_path": f"file://{rpath}",
-                "manifest_length": os.path.getsize(rpath),
-                "partition_spec_id": int(r.get("partition_spec_id") or 0),
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": min(
-                    int(e["sequence_number"]) for e in out_entries
-                ),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": sum(
-                    1 for e in out_entries if e["status"] == 0
-                ),
-                "deleted_files_count": sum(
-                    1 for e in out_entries if e["status"] == 2
-                ),
-                "added_rows_count": 0,
-                "existing_rows_count": kept_rows,
-                "deleted_rows_count": dead_rows,
-            }
+            tx.write_manifest(out_entries, 1, r.get("partition_spec_id"))
         )
     summary = {
         "operation": "delete",
         "added-dvs": str(len(del_entries)),
         "removed-dvs": str(removed_dvs),
-        "added-position-deletes": str(new_positions),
+        "added-position-deletes": str(sum(len(v) for v in by_file.values())),
     }
-    return _ice_commit_snapshot(
-        table_path, chosen, meta, mlist_schema, new_mlist,
-        snapshot_id, sid, seq, now_ms, summary,
-        extra_snapshot={"first-row-id": next_row_id},
-        meta_updates={"next-row-id": next_row_id},
-    )
+    return tx.commit(new_mlist, summary)
 
 
 def merge_iceberg(
@@ -12118,54 +11604,18 @@ def merge_iceberg(
     if strategy not in ("auto", "cow", "mor"):
         raise ValueError(f"strategy must be auto|cow|mor, got {strategy!r}")
     spark = source.sparkSession
-    from .avro_lite import read_avro_file, write_avro_file
-
-    chosen, meta = _iceberg_current_metadata_named(table_path)
-    if int(meta.get("format-version", 1)) != 2:
-        raise NotImplementedError(
-            f"merge into a format-version {meta.get('format-version', 1)} "
-            "Iceberg table is not supported (v2 only; v1: run "
-            "upgrade_iceberg_v1_to_v2 first — a metadata-only commit; "
-            "v3 writes, which must maintain deletion vectors and row "
-            "lineage, are not implemented)"
-        )
-    schema = _iceberg_table_schema(meta)
-    if schema is None:
-        raise ValueError(f"Iceberg metadata at {table_path} carries no schema")
+    tx = _ice_open(table_path, "merge_iceberg")
+    schema = tx.schema
     cols = [f.name for f in schema.fields]
     if key not in cols:
         raise ValueError(f"key {key!r} is not a table column ({cols})")
-    spec = next(
-        (
-            s for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id")
-        ),
-        {"fields": []},
-    )
-    field_types = {}
-    cur_schema = next(
-        s for s in meta.get("schemas", [])
-        if s.get("schema-id") == meta.get("current-schema-id")
-    )
-    for f in cur_schema["fields"]:
-        field_types[f["name"]] = f["type"]
     # Transformed specs (days()/bucket[N]/truncate[W]) merge like
     # identity ones since r12: wherever NEW data files stage, the
     # transform evaluates per staged row (_ice_transform_expr) and the
     # partition record comes from the staged hive value; position
     # deletes still INHERIT their target files' records.
-    part_fields = _ice_spec_part_fields(spec, cur_schema)
-    spec_fields = spec.get("fields", [])
+    part_fields = tx.part_fields
 
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    if sid in (None, -1) or sid not in snaps:
-        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
-    snap = snaps[sid]
-    mlist_path = _iceberg_local_path(snap["manifest-list"], table_path)
-    _s, mlist_records = read_avro_file(mlist_path)
-    data_recs = [r for r in mlist_records if r.get("content", 0) == 0]
-    delete_recs = [r for r in mlist_records if r.get("content", 0) != 0]
     # Existing row-level deletes: EQUALITY deletes (value-based,
     # sequence-ordered — the shape a native engine's MERGE can leave)
     # force the COMPACTING path, because which rows they kill depends
@@ -12178,50 +11628,26 @@ def merge_iceberg(
     # anti-join out of every scan and the delete manifests carry
     # forward verbatim, so a snapshot a MoR merge has touched still
     # merges at O(affected files), not O(table).
-    existing_pos_files: list[str] = []
-    has_eq = False
-    for r in delete_recs:
-        _sd, dentries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        for e in dentries:
-            if e.get("status", 1) == 2:
-                continue
-            if e["data_file"].get("content", 1) == 2:
-                has_eq = True
-            else:
-                existing_pos_files.append(
-                    _iceberg_local_path(e["data_file"]["file_path"], table_path)
-                )
-    compacting = has_eq
+    existing_pos_files, eq_dels, _dvs = tx.live_deletes()
+    compacting = bool(eq_dels)
 
     # Per-manifest live entries, with normalized data-file paths; keep
     # each file's ORIGINAL file_path string and partition record — a
     # new position-delete row must reference the manifest's exact URI
     # (foreign readers match strings, not normalized paths) — and
     # its record_count, the physical size the planner needs.
-    manifests: list[dict] = []
+    manifests = tx.live_manifests()
     all_paths: list[str] = []
     orig_path: dict[str, str] = {}
     part_of: dict[str, dict] = {}
     records_of: dict[str, int] = {}
-    for r in data_recs:
-        _s2, entries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        live = [e for e in entries if e.get("status", 1) != 2]
-        paths = []
-        for e in live:
+    for mf in manifests:
+        for e, ap in zip(mf["entries"], mf["paths"]):
             _ice_require_parquet(e["data_file"], "merge_iceberg")
-            ap = os.path.abspath(
-                _iceberg_local_path(e["data_file"]["file_path"], table_path)
-            )
-            paths.append(ap)
             orig_path[ap] = e["data_file"]["file_path"]
             part_of[ap] = dict(e["data_file"].get("partition") or {})
             records_of[ap] = int(e["data_file"]["record_count"])
-        manifests.append({"rec": r, "entries": live, "paths": paths})
-        all_paths.extend(paths)
+        all_paths.extend(mf["paths"])
 
     if mode == "upsert":
         extra = _merge_source_extra(
@@ -12236,10 +11662,10 @@ def merge_iceberg(
             # schema; pre-evolution files read the column as null.
             from pyspark.sql.types import StructField
 
-            meta = dict(meta)
+            meta = dict(tx.meta)
             last = int(
                 meta.get("last-column-id")
-                or max(f["id"] for f in cur_schema["fields"])
+                or max(f["id"] for f in tx.cur_schema["fields"])
             )
             counter = [last]
 
@@ -12261,15 +11687,15 @@ def merge_iceberg(
                 (s.get("schema-id", 0) for s in meta.get("schemas", [])),
                 default=0,
             )
-            cur_schema = {
+            tx.cur_schema = {
                 "type": "struct",
                 "schema-id": new_schema_id,
-                "fields": list(cur_schema["fields"]) + new_fields,
+                "fields": list(tx.cur_schema["fields"]) + new_fields,
             }
-            meta["schemas"] = list(meta.get("schemas", [])) + [cur_schema]
+            meta["schemas"] = list(meta.get("schemas", [])) + [tx.cur_schema]
             meta["current-schema-id"] = new_schema_id
             meta["last-column-id"] = counter[0]
-            field_types = {f["name"]: f["type"] for f in cur_schema["fields"]}
+            tx.meta = meta
             for c in sorted(extra, key=source.columns.index):
                 schema = schema.add(StructField(c, src_types[c], True))
             cols = [f.name for f in schema.fields]
@@ -12387,17 +11813,11 @@ def merge_iceberg(
 
         if mode == "delete" and not (counts or rewrite_paths):
             # nothing matched: no-op, current snapshot stands
-            return (sid, {"matched": 0}) if return_stats else sid
+            return (tx.parent_id, {"matched": 0}) if return_stats else tx.parent_id
 
         new_df = survivors
         if mode == "upsert":
             new_df = src if survivors is None else survivors.unionByName(src)
-
-        now_ms = int(time.time() * 1000)
-        snapshot_id = uuid.uuid4().int >> 65
-        seq = int(meta.get("last-sequence-number", 0)) + 1
-        entry_schema, mlist_schema = _ice_manifest_schemas(part_fields)
-        mdir = os.path.join(table_path, "metadata")
 
         # _iceberg_stage_files executes the plan (the last consumer of
         # the pinned keys); manifest/metadata writes below are pure
@@ -12405,8 +11825,8 @@ def merge_iceberg(
         staged = (
             _iceberg_stage_files(
                 new_df.select(*cols), table_path, part_fields,
-                bounds_fields=_ice_schema_bounds_fields(cur_schema),
-                count_fields=_ice_schema_count_fields(cur_schema),
+                bounds_fields=_ice_schema_bounds_fields(tx.cur_schema),
+                count_fields=_ice_schema_count_fields(tx.cur_schema),
             )
             if new_df is not None
             else []
@@ -12416,14 +11836,7 @@ def merge_iceberg(
         if pos_pairs is not None:
             pos_pairs.unpersist()
     retire = set(rewrite_paths) | set(dead)
-    cur_spec_id = int(meta.get("default-spec-id") or 0)
-    new_mlist: list[dict] = []
-    add_rec, n_added = _ice_add_data_manifest(
-        staged, part_fields, entry_schema, cur_schema, spec_fields, mdir,
-        snapshot_id, seq, spec_id=cur_spec_id,
-    )
-    if add_rec is not None:
-        new_mlist.append(add_rec)
+    new_mlist, n_added = _ice_add_data_manifest(tx, staged)
     # New POSITION DELETE files for the merge-on-read portion: one
     # sorted (file_path, pos) parquet per affected partition (spec:
     # delete files belong to one partition, like data files), rows
@@ -12470,8 +11883,8 @@ def merge_iceberg(
             pv = dict(pkey)
             del_entries.append(
                 {
-                    "status": 1, "snapshot_id": snapshot_id,
-                    "sequence_number": seq, "file_sequence_number": seq,
+                    "status": 1, "snapshot_id": tx.snapshot_id,
+                    "sequence_number": tx.seq, "file_sequence_number": tx.seq,
                     "data_file": {
                         "content": 1, "file_path": f"file://{dpath}",
                         "file_format": "PARQUET",
@@ -12483,64 +11896,16 @@ def merge_iceberg(
                     },
                 }
             )
-        mpath = os.path.join(mdir, f"{uuid.uuid4().hex}-m0d.avro")
-        write_avro_file(
-            mpath, entry_schema, del_entries,
-            extra_meta={
-                "schema": json.dumps(cur_schema).encode("utf-8"),
-                "schema-id": str(cur_schema.get("schema-id", 0)).encode(
-                    "utf-8"
-                ),
-                "partition-spec": json.dumps(spec_fields).encode("utf-8"),
-                "partition-spec-id": str(cur_spec_id).encode("ascii"),
-                "format-version": b"2",
-                "content": b"deletes",
-            },
-        )
-        new_mlist.append(
-            {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": cur_spec_id, "content": 1,
-                "sequence_number": seq, "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(del_entries),
-                "existing_files_count": 0, "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in del_entries
-                ),
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            }
-        )
+        new_mlist.append(tx.write_manifest(del_entries, 1, tx.spec_id))
 
-    new_mlist.extend(
-        _ice_retire_data_manifests(
-            manifests, retire, seq, snapshot_id,
-            entry_schema, cur_schema, spec_fields, mdir,
-            spec_id=cur_spec_id,
-            all_specs={
-                int(sp.get("spec-id") or 0): sp
-                for sp in meta.get("partition-specs", [])
-            },
-        )
-    )
+    new_mlist += _ice_retire_data_manifests(tx, manifests, retire)
     if compacting:
-        new_mlist.extend(
-            _ice_retire_delete_manifests(
-                delete_recs, table_path, seq, snapshot_id,
-                entry_schema, cur_schema, spec_fields, part_fields, mdir,
-                spec_id=cur_spec_id,
-                all_specs={
-                    int(sp.get("spec-id") or 0): sp
-                    for sp in meta.get("partition-specs", [])
-                },
-            )
-        )
+        new_mlist += _ice_retire_delete_manifests(tx, tx.delete_recs)
     else:
         # Prior POSITION-delete manifests stay live: their pairs are
         # path-exact, so they keep applying to untouched files and
         # dangle harmlessly for retired ones (maintenance reclaims).
-        new_mlist.extend(_mlist_carry(r) for r in delete_recs)
+        new_mlist += [_mlist_carry(r) for r in tx.delete_recs]
 
     summary = {
         "operation": "overwrite",
@@ -12553,10 +11918,7 @@ def merge_iceberg(
             sum(len(v) for v in mor_new.values())
         ),
     }
-    new_sid = _ice_commit_snapshot(
-        table_path, chosen, meta, mlist_schema, new_mlist,
-        snapshot_id, sid, seq, now_ms, summary,
-    )
+    new_sid = tx.commit(new_mlist, summary)
     return (new_sid, {"matched": matched_n}) if return_stats else new_sid
 
 
@@ -12564,50 +11926,35 @@ def _ice_commit_snapshot(
     table_path: str,
     chosen: str,
     meta: dict,
-    mlist_schema: dict,
     new_mlist: list[dict],
-    snapshot_id: int,
-    parent_id: int,
-    seq: int,
-    now_ms: int,
-    summary: dict,
-    extra_snapshot: dict | None = None,
-    meta_updates: dict | None = None,
+    snap: dict,
 ) -> int:
-    """Write the manifest list, append the snapshot, and commit the
-    next metadata JSON through ``_ice_commit_metadata`` — the
-    shared tail of every snapshot-producing Iceberg write here.
-    ``extra_snapshot`` merges extra keys into the snapshot record
-    (v3 ``first-row-id``); ``meta_updates`` into the table metadata
-    (v3 ``next-row-id``)."""
+    """Publish one snapshot, the tail of ``_IceTxn.commit`` and so of
+    every snapshot-producing Iceberg write here: write ``new_mlist`` as
+    the manifest list, point the snapshot record ``snap`` at it and
+    stamp the commit time, append it to ``meta``'s snapshots and
+    snapshot log, and commit the result as the version after ``chosen``
+    through ``_ice_commit_metadata``. ``meta`` already carries the
+    writer's own table updates (an ``evolve=True`` schema, the v3
+    ``next-row-id``). Returns the snapshot id."""
     from .avro_lite import write_avro_file
 
-    mdir = os.path.join(table_path, "metadata")
-    mlist_name = f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
-    mlist_abs = os.path.join(mdir, mlist_name)
-    write_avro_file(mlist_abs, mlist_schema, new_mlist)
-    new_snap = {
-        "snapshot-id": snapshot_id,
-        "parent-snapshot-id": parent_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": f"file://{mlist_abs}",
-        "summary": summary,
-        # The snapshot pins the schema it was written under — after an
-        # evolve=True merge that is the freshly-committed schema.
-        "schema-id": int(meta.get("current-schema-id", 0)),
-        **(extra_snapshot or {}),
-    }
+    now_ms = int(time.time() * 1000)
+    sid = snap["snapshot-id"]
+    mlist_abs = os.path.join(
+        table_path, "metadata", f"snap-{sid}-1-{uuid.uuid4().hex}.avro"
+    )
+    write_avro_file(mlist_abs, _ice_manifest_schemas([])[1], new_mlist)
+    snap = {**snap, "timestamp-ms": now_ms, "manifest-list": f"file://{mlist_abs}"}
     new_meta = dict(meta)
-    new_meta.update(meta_updates or {})
-    new_meta["last-sequence-number"] = seq
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
+    new_meta["last-sequence-number"] = snap["sequence-number"]
+    new_meta["current-snapshot-id"] = sid
+    new_meta["snapshots"] = list(meta.get("snapshots", [])) + [snap]
     new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
+        {"timestamp-ms": now_ms, "snapshot-id": sid}
     ]
     _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
-    return snapshot_id
+    return sid
 
 
 def compact_iceberg(spark: SparkSession, table_path: str) -> int | None:
@@ -12634,98 +11981,21 @@ def compact_iceberg(spark: SparkSession, table_path: str) -> int | None:
     Every prior delete file retires status-2 either way. Returns the
     new snapshot id, or None when the snapshot carries no live
     deletes."""
-    from .avro_lite import read_avro_file
-
-    chosen, meta = _iceberg_current_metadata_named(table_path)
-    fv = int(meta.get("format-version", 1))
-    if fv not in (2, 3):
-        raise NotImplementedError(
-            f"compaction of a format-version {fv} Iceberg table is not "
-            "supported (v2 and v3 only; v1: run upgrade_iceberg_v1_to_v2 "
-            "first — a metadata-only commit)"
-        )
-    schema = _iceberg_table_schema(meta)
-    if schema is None:
-        raise ValueError(f"Iceberg metadata at {table_path} carries no schema")
-    cols = [f.name for f in schema.fields]
-    spec = next(
-        (
-            s for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id")
-        ),
-        {"fields": []},
-    )
-    cur_schema = next(
-        s for s in meta.get("schemas", [])
-        if s.get("schema-id") == meta.get("current-schema-id")
-    )
-    # Transformed specs compact like identity ones (r12): survivors
-    # re-stage with the transform evaluated per row.
-    part_fields = _ice_spec_part_fields(spec, cur_schema)
-    spec_fields = spec.get("fields", [])
-
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    if sid in (None, -1) or sid not in snaps:
-        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
-    snap = snaps[sid]
-    _s, mlist_records = read_avro_file(
-        _iceberg_local_path(snap["manifest-list"], table_path)
-    )
-    data_recs = [r for r in mlist_records if r.get("content", 0) == 0]
-    delete_recs = [r for r in mlist_records if r.get("content", 0) != 0]
-    existing_pos_files: list[str] = []
-    dvs: list[tuple[str, str, int, int]] = []
-    has_eq = False
-    n_live_deletes = 0
-    for r in delete_recs:
-        _sd, dentries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        for e in dentries:
-            if e.get("status", 1) == 2:
-                continue
-            n_live_deletes += 1
-            dfr = e["data_file"]
-            if str(dfr.get("file_format", "PARQUET")).upper() == "PUFFIN":
-                dvs.append(
-                    (
-                        _iceberg_local_path(
-                            str(dfr["referenced_data_file"]), table_path
-                        ),
-                        _iceberg_local_path(dfr["file_path"], table_path),
-                        int(dfr["content_offset"]),
-                        int(dfr["content_size_in_bytes"]),
-                    )
-                )
-            elif dfr.get("content", 1) == 2:
-                has_eq = True
-            else:
-                existing_pos_files.append(
-                    _iceberg_local_path(dfr["file_path"], table_path)
-                )
+    tx = _ice_open(table_path, "compact_iceberg", (2, 3))
+    cols = [f.name for f in tx.schema.fields]
+    existing_pos_files, eq_dels, dvs = tx.live_deletes()
+    n_live_deletes = len(existing_pos_files) + len(eq_dels) + len(dvs)
     if not n_live_deletes:
         return None
 
-    manifests: list[dict] = []
+    manifests = tx.live_manifests()
     all_paths: list[str] = []
-    for r in data_recs:
-        _s2, entries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        live = [e for e in entries if e.get("status", 1) != 2]
-        for e in live:
+    for mf in manifests:
+        for e in mf["entries"]:
             _ice_require_parquet(e["data_file"], "compact_iceberg")
-        paths = [
-            os.path.abspath(
-                _iceberg_local_path(e["data_file"]["file_path"], table_path)
-            )
-            for e in live
-        ]
-        manifests.append({"rec": r, "entries": live, "paths": paths})
-        all_paths.extend(paths)
+        all_paths.extend(mf["paths"])
 
-    if has_eq:
+    if eq_dels:
         retire = set(all_paths)
         survivors = read_iceberg(spark, table_path).select(*cols)
     else:
@@ -12762,7 +12032,7 @@ def compact_iceberg(spark: SparkSession, table_path: str) -> int | None:
         }
         survivors = None
         if retire:
-            rdr = spark.read.schema(schema)
+            rdr = spark.read.schema(tx.schema)
             scan = rdr.parquet(*sorted(retire)).select(
                 *cols,
                 _norm_file_path(F.col("_metadata.file_path")).alias("__fp"),
@@ -12775,68 +12045,26 @@ def compact_iceberg(spark: SparkSession, table_path: str) -> int | None:
                 "left_anti",
             ).select(*cols)
 
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int >> 65
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    entry_schema, mlist_schema = _ice_manifest_schemas(
-        part_fields, v3=fv == 3
-    )
-    mdir = os.path.join(table_path, "metadata")
     staged = (
         _iceberg_stage_files(
-            survivors, table_path, part_fields,
-            bounds_fields=_ice_schema_bounds_fields(cur_schema),
-            count_fields=_ice_schema_count_fields(cur_schema),
+            survivors, table_path, tx.part_fields,
+            bounds_fields=_ice_schema_bounds_fields(tx.cur_schema),
+            count_fields=_ice_schema_count_fields(tx.cur_schema),
         )
         if survivors is not None
         else []
     )
-    cur_spec_id = int(meta.get("default-spec-id") or 0)
-    new_mlist: list[dict] = []
-    add_rec, n_added = _ice_add_data_manifest(
-        staged, part_fields, entry_schema, cur_schema, spec_fields, mdir,
-        snapshot_id, seq, spec_id=cur_spec_id,
-    )
-    if add_rec is not None:
-        new_mlist.append(add_rec)
-    new_mlist.extend(
-        _ice_retire_data_manifests(
-            manifests, retire, seq, snapshot_id,
-            entry_schema, cur_schema, spec_fields, mdir,
-            spec_id=cur_spec_id,
-            all_specs={
-                int(sp.get("spec-id") or 0): sp
-                for sp in meta.get("partition-specs", [])
-            },
-        )
-    )
-    new_mlist.extend(
-        _ice_retire_delete_manifests(
-            delete_recs, table_path, seq, snapshot_id,
-            entry_schema, cur_schema, spec_fields, part_fields, mdir,
-            spec_id=cur_spec_id,
-            all_specs={
-                int(sp.get("spec-id") or 0): sp
-                for sp in meta.get("partition-specs", [])
-            },
-        )
-    )
-    summary = {
-        "operation": "replace",
-        "added-data-files": str(n_added),
-        "deleted-data-files": str(len(retire)),
-        "removed-delete-files": str(n_live_deletes),
-    }
-    extra_snap = None
-    meta_up = None
-    if fv == 3:
-        next_row = int(meta.get("next-row-id", 0))
-        extra_snap = {"first-row-id": next_row}
-        meta_up = {"next-row-id": next_row}
-    return _ice_commit_snapshot(
-        table_path, chosen, meta, mlist_schema, new_mlist,
-        snapshot_id, sid, seq, now_ms, summary,
-        extra_snapshot=extra_snap, meta_updates=meta_up,
+    new_mlist, n_added = _ice_add_data_manifest(tx, staged)
+    new_mlist += _ice_retire_data_manifests(tx, manifests, retire)
+    new_mlist += _ice_retire_delete_manifests(tx, tx.delete_recs)
+    return tx.commit(
+        new_mlist,
+        {
+            "operation": "replace",
+            "added-data-files": str(n_added),
+            "deleted-data-files": str(len(retire)),
+            "removed-delete-files": str(n_live_deletes),
+        },
     )
 
 
@@ -12863,8 +12091,6 @@ def _ice_rewrite_where(
     and cannot touch the rewrite's output, which commits at a HIGHER
     data sequence number than every existing delete. NULL-predicate
     rows survive (SQL semantics)."""
-    from .avro_lite import read_avro_file
-
     where_n = _norm_where(where)
     if assigns is None and not where_n:
         raise ValueError(
@@ -12873,18 +12099,11 @@ def _ice_rewrite_where(
         )
     if assigns is not None and not assigns:
         raise ValueError("UPDATE requires at least one SET assignment")
-    chosen, meta = _iceberg_current_metadata_named(table_path)
-    if int(meta.get("format-version", 1)) != 2:
-        op_name = "UPDATE" if assigns is not None else "DELETE"
-        raise NotImplementedError(
-            f"predicate {op_name} on a format-version "
-            f"{meta.get('format-version', 1)} Iceberg table is not "
-            "supported (v2 only; v1: run upgrade_iceberg_v1_to_v2 "
-            "first; v3 writes are not implemented)"
-        )
-    schema = _iceberg_table_schema(meta)
-    if schema is None:
-        raise ValueError(f"Iceberg metadata at {table_path} carries no schema")
+    tx = _ice_open(
+        table_path,
+        "update_iceberg_where" if assigns is not None else "delete_iceberg_where",
+    )
+    schema = tx.schema
     cols = [f.name for f in schema.fields]
     if assigns is not None:
         for c in assigns:
@@ -12894,41 +12113,11 @@ def _ice_rewrite_where(
                     f"(table columns: {sorted(cols)})"
                 )
     types = {f.name: f.dataType for f in schema.fields}
-    spec = next(
-        (
-            s for s in meta.get("partition-specs", [])
-            if s.get("spec-id") == meta.get("default-spec-id")
-        ),
-        {"fields": []},
-    )
-    cur_schema = next(
-        s for s in meta.get("schemas", [])
-        if s.get("schema-id") == meta.get("current-schema-id")
-    )
-    part_fields = _ice_spec_part_fields(spec, cur_schema)
-    spec_fields = spec.get("fields", [])
-
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    if sid in (None, -1) or sid not in snaps:
-        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
-    snap = snaps[sid]
-    _s, mlist_records = read_avro_file(
-        _iceberg_local_path(snap["manifest-list"], table_path)
-    )
-    data_recs = [r for r in mlist_records if r.get("content", 0) == 0]
-    delete_recs = [r for r in mlist_records if r.get("content", 0) != 0]
     # Live row-level delete files are APPLIED to the candidate scan
     # (late-r14, the fence lift): the rewrite's survivors are the
     # post-delete live rows, and the new data files commit at a higher
     # sequence number than every existing delete, so none re-applies.
-    pos_delete_files, eq_deletes, dml_dvs = _ice_collect_deletes(
-        table_path,
-        [
-            (r["manifest_path"], int(r.get("sequence_number") or 0))
-            for r in delete_recs
-        ],
-    )
+    pos_delete_files, eq_deletes, dml_dvs = tx.live_deletes()
     if dml_dvs:
         # Unreachable through the public surface (every write path
         # gates on format-version 2, and v2 tables cannot carry DVs) —
@@ -12942,27 +12131,16 @@ def _ice_rewrite_where(
 
     plan = (
         _ice_prune_plan(
-            meta, where_n, spark.conf.get("spark.sql.session.timeZone", None)
+            tx.meta, where_n, spark.conf.get("spark.sql.session.timeZone", None)
         )
         if where_n
         else []
     )
-    manifests: list[dict] = []
+    manifests = tx.live_manifests()
     cand_files: list[tuple[str, int, str]] = []
-    for r in data_recs:
-        _s2, entries = read_avro_file(
-            _iceberg_local_path(r["manifest_path"], table_path)
-        )
-        live = [e for e in entries if e.get("status", 1) != 2]
-        paths = [
-            os.path.abspath(
-                _iceberg_local_path(e["data_file"]["file_path"], table_path)
-            )
-            for e in live
-        ]
-        manifests.append({"rec": r, "entries": live, "paths": paths})
-        mseq = int(r.get("sequence_number") or 0)
-        for e, p in zip(live, paths):
+    for mf in manifests:
+        mseq = int(mf["rec"].get("sequence_number") or 0)
+        for e, p in zip(mf["entries"], mf["paths"]):
             if plan:
                 try:
                     possible = _ice_prune_keep(e["data_file"], plan)
@@ -12979,10 +12157,10 @@ def _ice_rewrite_where(
                 )
             )
     if not cand_files:
-        return sid, 0
+        return tx.parent_id, 0
 
     scan = _ice_scan_with_deletes(
-        spark, meta, table_path, cand_files,
+        spark, tx.meta, table_path, cand_files,
         pos_delete_files, eq_deletes, schema, keep_path=True,
     )
     hit = (
@@ -12997,7 +12175,7 @@ def _ice_rewrite_where(
         for r in scan.filter(hit).select("__fp").distinct().collect()
     }
     if not touched:
-        return sid, 0  # pruning kept a superset; honest no-op
+        return tx.parent_id, 0  # pruning kept a superset; honest no-op
     rewrite_df = scan.filter(F.col("__fp").isin(*sorted(touched)))
     n_aff = rewrite_df.filter(hit).count()
 
@@ -13018,57 +12196,21 @@ def _ice_rewrite_where(
         # a partition-source SET moves rows: the restage re-derives
         # partition values through the spec transforms.
         out_df = rewrite_df.select(*upd).select(*cols)
-    retire = touched
-
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int >> 65
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    entry_schema, mlist_schema = _ice_manifest_schemas(part_fields)
-    mdir = os.path.join(table_path, "metadata")
     staged = _iceberg_stage_files(
-        out_df, table_path, part_fields,
-        bounds_fields=_ice_schema_bounds_fields(cur_schema),
-        count_fields=_ice_schema_count_fields(cur_schema),
+        out_df, table_path, tx.part_fields,
+        bounds_fields=_ice_schema_bounds_fields(tx.cur_schema),
+        count_fields=_ice_schema_count_fields(tx.cur_schema),
     )
-    cur_spec_id = int(meta.get("default-spec-id") or 0)
-    new_mlist: list[dict] = []
-    add_rec, n_added = _ice_add_data_manifest(
-        staged, part_fields, entry_schema, cur_schema, spec_fields, mdir,
-        snapshot_id, seq, spec_id=cur_spec_id,
-    )
-    if add_rec is not None:
-        new_mlist.append(add_rec)
-    new_mlist.extend(
-        _ice_retire_data_manifests(
-            manifests, retire, seq, snapshot_id,
-            entry_schema, cur_schema, spec_fields, mdir,
-            spec_id=cur_spec_id,
-            all_specs={
-                int(sp.get("spec-id") or 0): sp
-                for sp in meta.get("partition-specs", [])
-            },
-        )
-    )
-    new_mlist.extend(_mlist_carry(r) for r in delete_recs)
-    if assigns is None:
-        summary = {
-            "operation": "delete",
-            "added-data-files": str(n_added),
-            "deleted-data-files": str(len(retire)),
-            "deleted-records": str(n_aff),
-        }
-    else:
-        summary = {
-            "operation": "overwrite",
-            "added-data-files": str(n_added),
-            "deleted-data-files": str(len(retire)),
-            "updated-records": str(n_aff),
-        }
-    new_sid = _ice_commit_snapshot(
-        table_path, chosen, meta, mlist_schema, new_mlist,
-        snapshot_id, sid, seq, now_ms, summary,
-    )
-    return new_sid, n_aff
+    new_mlist, n_added = _ice_add_data_manifest(tx, staged)
+    new_mlist += _ice_retire_data_manifests(tx, manifests, touched)
+    new_mlist += [_mlist_carry(r) for r in tx.delete_recs]
+    summary = {
+        "operation": "delete" if assigns is None else "overwrite",
+        "added-data-files": str(n_added),
+        "deleted-data-files": str(len(touched)),
+        ("deleted-records" if assigns is None else "updated-records"): str(n_aff),
+    }
+    return tx.commit(new_mlist, summary), n_aff
 
 
 def delete_iceberg_where(
@@ -13141,80 +12283,26 @@ def rewrite_iceberg_manifests(table_path: str) -> tuple[int | None, dict]:
     longer lists refuses, like every manifest rewrite here. Returns
     (new snapshot id or None when at most one data manifest per spec,
     {"merged": n_in, "created": n_out})."""
-    from .avro_lite import read_avro_file, write_avro_file
-
-    chosen, meta = _iceberg_current_metadata_named(table_path)
-    if int(meta.get("format-version", 1)) != 2:
-        raise NotImplementedError(
-            f"manifest rewrite on a format-version "
-            f"{meta.get('format-version', 1)} Iceberg table is not "
-            "supported (v2 only; v1: run upgrade_iceberg_v1_to_v2 "
-            "first; v3 writes are not implemented)"
-        )
-    cur_schema = next(
-        s for s in meta.get("schemas", [])
-        if s.get("schema-id") == meta.get("current-schema-id")
-    )
-    all_specs = {
-        int(sp.get("spec-id") or 0): sp
-        for sp in meta.get("partition-specs", [])
-    }
-    sid = meta.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-    if sid in (None, -1) or sid not in snaps:
-        raise FileNotFoundError(f"Iceberg table at {table_path} has no snapshot")
-    snap = snaps[sid]
-    _s, mlist_records = read_avro_file(
-        _iceberg_local_path(snap["manifest-list"], table_path)
-    )
-    data_recs = [r for r in mlist_records if r.get("content", 0) == 0]
-    delete_recs = [r for r in mlist_records if r.get("content", 0) != 0]
-    by_spec: dict[int, list[dict]] = {}
-    for r in data_recs:
-        by_spec.setdefault(int(r.get("partition_spec_id") or 0), []).append(r)
-    if not any(len(v) >= 2 for v in by_spec.values()):
+    tx = _ice_open(table_path, "rewrite_iceberg_manifests")
+    specs = [int(r.get("partition_spec_id") or 0) for r in tx.data_recs]
+    if len(set(specs)) == len(specs):  # at most one data manifest per spec
         return None, {"merged": 0, "created": 0}
+    by_spec: dict[int, list[dict]] = {}
+    for mf in tx.live_manifests():
+        by_spec.setdefault(int(mf["rec"].get("partition_spec_id") or 0), []).append(mf)
 
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int >> 65
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    mdir = os.path.join(table_path, "metadata")
     new_mlist: list[dict] = []
     n_merged = n_created = 0
-    for spec_id, recs in sorted(by_spec.items()):
-        if len(recs) < 2:
-            new_mlist.extend(_mlist_carry(r) for r in recs)
+    for spec_id, mfs in sorted(by_spec.items()):
+        if len(mfs) < 2:
+            new_mlist.extend(_mlist_carry(mf["rec"]) for mf in mfs)
             continue
-        spec_s = all_specs.get(spec_id)
-        pf_s = None
-        if spec_s is not None:
-            try:
-                pf_s = _ice_spec_part_fields(spec_s, cur_schema)
-            except (ValueError, NotImplementedError):
-                pf_s = None
-        if pf_s is None:
-            raise NotImplementedError(
-                f"cannot merge manifests under partition spec {spec_id}, "
-                "which the table metadata no longer describes — compact "
-                "the table with its native engine first"
-            )
-        entry_schema_s, _ml = _ice_manifest_schemas(pf_s)
         merged: list[dict] = []
-        n_rows = 0
-        min_seq = seq
-        for r in recs:
-            _s2, entries = read_avro_file(
-                _iceberg_local_path(r["manifest_path"], table_path)
-            )
-            mseq = int(r.get("sequence_number") or 0)
-            for e in entries:
-                if e.get("status", 1) == 2:
-                    continue  # dead: only historic lists reference it
+        for mf in mfs:
+            mseq = int(mf["rec"].get("sequence_number") or 0)
+            for e in mf["entries"]:
                 eseq = e.get("sequence_number")
                 eseq = int(eseq) if eseq is not None else mseq
-                min_seq = min(min_seq, eseq)
-                nrec = int(e["data_file"].get("record_count", 0) or 0)
-                n_rows += nrec
                 # An explicit null (key present, value None — the normal
                 # shape for foreign-written ADDED entries relying on
                 # inheritance) must RESOLVE here: the spec permits a null
@@ -13232,45 +12320,17 @@ def rewrite_iceberg_manifests(table_path: str) -> tuple[int | None, dict]:
                         "data_file": _ice_datafile_carry(e["data_file"]),
                     }
                 )
-            n_merged += 1
-        mpath = os.path.join(mdir, f"{uuid.uuid4().hex}-mm.avro")
-        write_avro_file(
-            mpath, entry_schema_s, merged,
-            extra_meta=_ice_data_manifest_meta(
-                cur_schema, spec_s.get("fields", []), b"data", spec_id
-            ),
-        )
+        n_merged += len(mfs)
+        new_mlist.append(tx.write_manifest(merged, 0, spec_id))
         n_created += 1
-        new_mlist.append(
-            {
-                "manifest_path": f"file://{mpath}",
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": spec_id, "content": 0,
-                "sequence_number": seq, "min_sequence_number": min_seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": len(merged),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": n_rows,
-                "deleted_rows_count": 0,
-            }
-        )
-    new_mlist.extend(_mlist_carry(r) for r in delete_recs)
-    _entry_schema, mlist_schema = _ice_manifest_schemas(
-        _ice_spec_part_fields(
-            all_specs.get(int(meta.get("default-spec-id") or 0), {"fields": []}),
-            cur_schema,
-        )
-    )
-    summary = {
-        "operation": "replace",
-        "manifests-replaced": str(n_merged),
-        "manifests-created": str(n_created),
-    }
-    new_sid = _ice_commit_snapshot(
-        table_path, chosen, meta, mlist_schema, new_mlist,
-        snapshot_id, sid, seq, now_ms, summary,
+    new_mlist += [_mlist_carry(r) for r in tx.delete_recs]
+    new_sid = tx.commit(
+        new_mlist,
+        {
+            "operation": "replace",
+            "manifests-replaced": str(n_merged),
+            "manifests-created": str(n_created),
+        },
     )
     return new_sid, {"merged": n_merged, "created": n_created}
 

@@ -12,8 +12,10 @@ makes commits die at a step of that primitive and checks that
 - the staged temp files left behind match no log, metadata or timeline
   pattern.
 
-The Iceberg resolver tests at the end cover a hint left stale or empty
-by a writer that died between the metadata file and the hint.
+The Iceberg cases cover an append, a merge-on-read merge that adds a
+position-delete manifest, and the compaction that retires it. The
+resolver tests at the end cover a hint left stale or empty by a writer
+that died between the metadata file and the hint.
 """
 
 import json
@@ -24,8 +26,11 @@ import pytest
 
 from automation_of_building_a_transactional_data_lake_spark.formats import atomic
 from automation_of_building_a_transactional_data_lake_spark.formats.interop import (
+    _iceberg_current_metadata,
     alter_iceberg_table,
+    compact_iceberg,
     merge_delta,
+    merge_iceberg,
     read_delta,
     read_hudi,
     read_iceberg,
@@ -230,6 +235,74 @@ def test_iceberg_append_and_alter_survive_commit_crashes(spark, tmp_path, monkey
     )
     with open(os.path.join(mdir, "version-hint.text"), encoding="ascii") as f:
         assert f.read() == "6"
+
+
+def _ice_state(spark, root):
+    """The rows readers see and the current snapshot's operation."""
+    meta = _iceberg_current_metadata(root)
+    snap = next(
+        s for s in meta["snapshots"]
+        if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    return _rows(read_iceberg(spark, root)), snap["summary"]["operation"]
+
+
+def _ice_next_commit_lands_at(spark, root, version, rows):
+    """An append after the crashes commits as ``v<version>``."""
+    write_iceberg(_df(spark, rows), root, mode="append")
+    mdir = os.path.join(root, "metadata")
+    assert sorted(f for f in os.listdir(mdir) if _ICE_META.fullmatch(f)) == sorted(
+        f"v{v}.metadata.json" for v in range(1, version + 1)
+    )
+    with open(os.path.join(mdir, "version-hint.text"), encoding="ascii") as f:
+        assert f.read() == str(version)
+
+
+def test_iceberg_mor_merge_survives_commit_crashes(spark, tmp_path, monkeypatch):
+    root = str(tmp_path / "ice")
+    write_iceberg(_df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1), root)
+
+    def mor_upsert(rows):
+        return lambda: merge_iceberg(
+            _df(spark, rows), root, key="id", strategy="mor"
+        )
+
+    _crash_then_commit(
+        monkeypatch, root, _ICE_META, mor_upsert([(2, "B")]),
+        lambda: _ice_state(spark, root),
+        old=([(1, "a"), (2, "b"), (3, "c")], "append"),
+        new=([(1, "a"), (2, "B"), (3, "c")], "overwrite"),
+    )
+    summary = _iceberg_current_metadata(root)["snapshots"][-1]["summary"]
+    assert summary["added-delete-files"] == "1"
+    # Dying between the metadata file and the hint: the merge is
+    # committed, and the next commit lands after it.
+    _crash(monkeypatch, "after", _ICE_META, mor_upsert([(3, "C")]))
+    assert _ice_state(spark, root) == ([(1, "a"), (2, "B"), (3, "C")], "overwrite")
+    _check_tree(root)
+    _ice_next_commit_lands_at(spark, root, 4, [(4, "d")])
+    assert _rows(read_iceberg(spark, root)) == [(1, "a"), (2, "B"), (3, "C"), (4, "d")]
+
+
+def test_iceberg_compact_survives_commit_crashes(spark, tmp_path, monkeypatch):
+    root = str(tmp_path / "ice")
+    write_iceberg(_df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1), root)
+    merge_iceberg(_df(spark, [(2, "B")]), root, key="id", strategy="mor")
+    rows = [(1, "a"), (2, "B"), (3, "c")]
+    _crash_then_commit(
+        monkeypatch, root, _ICE_META, lambda: compact_iceberg(spark, root),
+        lambda: _ice_state(spark, root),
+        old=(rows, "overwrite"),
+        new=(rows, "replace"),
+    )
+    merge_iceberg(_df(spark, [(3, "C")]), root, key="id", strategy="mor")
+    _crash(monkeypatch, "after", _ICE_META, lambda: compact_iceberg(spark, root))
+    rows = [(1, "a"), (2, "B"), (3, "C")]
+    assert _ice_state(spark, root) == (rows, "replace")
+    _check_tree(root)
+    assert compact_iceberg(spark, root) is None  # no live delete left
+    _ice_next_commit_lands_at(spark, root, 6, [(4, "d")])
+    assert _rows(read_iceberg(spark, root)) == rows + [(4, "d")]
 
 
 def test_hudi_upsert_survives_commit_crashes(spark, tmp_path, monkeypatch):

@@ -1,0 +1,273 @@
+"""Invariants every Iceberg snapshot producer keeps.
+
+Each snapshot-producing Iceberg writer commits through one transaction
+(``_IceTxn`` in ``formats/interop.py``). These tests drive every writer
+once on a tiny table and check, after each commit:
+
+- every manifest-list record's file and row counts and
+  ``min_sequence_number`` against the manifest it points to;
+- the header of every manifest the commit wrote: format version,
+  partition spec id and content;
+- on format-version 3, the snapshot's ``first-row-id`` and the table's
+  ``next-row-id``;
+- ``read_iceberg`` against a pandas model of the table.
+"""
+
+import io
+import json
+import os
+
+import pandas as pd
+
+from automation_of_building_a_transactional_data_lake_spark.formats.avro_lite import (
+    _decode,
+    read_avro_file,
+)
+from automation_of_building_a_transactional_data_lake_spark.formats.interop import (
+    _iceberg_current_metadata,
+    _iceberg_current_metadata_named,
+    _iceberg_local_path,
+    _mlist_carry,
+    binpack_iceberg,
+    compact_iceberg,
+    delete_iceberg_where,
+    merge_iceberg,
+    read_iceberg,
+    rewrite_iceberg_manifests,
+    rollback_iceberg,
+    truncate_iceberg,
+    update_iceberg_where,
+    upgrade_iceberg_v2_to_v3,
+    write_iceberg,
+    write_iceberg_deletion_vectors,
+    write_iceberg_equality_deletes,
+    zorder_iceberg,
+)
+
+SCHEMA = "id long, val string, n long"
+COLS = ["id", "val", "n"]
+
+
+def _header(path: str) -> dict:
+    with open(path, "rb") as f:
+        buf = io.BytesIO(f.read())
+    assert buf.read(4) == b"Obj\x01"
+    return _decode({"type": "map", "values": "bytes"}, buf, {})
+
+
+class _Table:
+    """A table under test and its pandas model."""
+
+    def __init__(self, spark, root):
+        self.spark, self.root = spark, root
+        self.model = pd.DataFrame({c: pd.Series(dtype=t) for c, t in
+                                   zip(COLS, ["int64", "object", "int64"])})
+        self.meta: dict = {}
+
+    def df(self, rows):
+        return self.spark.createDataFrame(rows, SCHEMA).coalesce(1)
+
+    def upsert(self, rows):
+        new = pd.DataFrame(rows, columns=COLS)
+        self.model = pd.concat(
+            [self.model[~self.model.id.isin(new.id)], new], ignore_index=True
+        )
+
+    def check(self, added_rows: int = 0) -> dict:
+        """Check the current snapshot; returns it."""
+        before, meta = self.meta, _iceberg_current_metadata(self.root)
+        self.meta = meta
+        snap = next(
+            s for s in meta["snapshots"]
+            if s["snapshot-id"] == meta["current-snapshot-id"]
+        )
+        _s, mlist = read_avro_file(_iceberg_local_path(snap["manifest-list"], self.root))
+        for r in mlist:
+            path = _iceberg_local_path(r["manifest_path"], self.root)
+            _s, entries = read_avro_file(path)
+            for status, kind in ((0, "existing"), (1, "added"), (2, "deleted")):
+                es = [e for e in entries if e["status"] == status]
+                assert r[f"{kind}_files_count"] == len(es), (kind, r)
+                assert r[f"{kind}_rows_count"] == sum(
+                    e["data_file"]["record_count"] for e in es
+                ), (kind, r)
+            seqs = [
+                r["sequence_number"] if e["sequence_number"] is None
+                else e["sequence_number"]
+                for e in entries
+            ]
+            assert r["min_sequence_number"] == min(seqs, default=r["sequence_number"])
+            assert r["manifest_length"] == os.path.getsize(path)
+            if r["added_snapshot_id"] == snap["snapshot-id"]:
+                hdr = _header(path)
+                assert hdr["format-version"] == str(meta["format-version"]).encode()
+                assert int(hdr["partition-spec-id"]) == r["partition_spec_id"]
+                assert hdr["content"] == (b"deletes" if r["content"] else b"data")
+        if meta["format-version"] == 3:
+            assert snap["first-row-id"] == before["next-row-id"]
+            assert meta["next-row-id"] == before["next-row-id"] + added_rows
+        got = read_iceberg(self.spark, self.root).select(*COLS).toPandas()
+        assert sorted(got.itertuples(index=False)) == sorted(
+            self.model.itertuples(index=False)
+        )
+        return snap
+
+
+def test_mlist_carry_reads_v1_names_and_fills_sparse_records():
+    v1 = _mlist_carry(
+        {
+            "manifest_path": "file:///m.avro", "manifest_length": 10,
+            "partition_spec_id": 0, "added_snapshot_id": 7,
+            "added_data_files_count": 2, "existing_data_files_count": 3,
+            "deleted_data_files_count": 1, "added_rows_count": 20,
+            "existing_rows_count": 30, "deleted_rows_count": 5,
+        }
+    )
+    assert v1 == {
+        "manifest_path": "file:///m.avro", "manifest_length": 10,
+        "partition_spec_id": 0, "content": 0, "sequence_number": 0,
+        "min_sequence_number": 0, "added_snapshot_id": 7,
+        "added_files_count": 2, "existing_files_count": 3,
+        "deleted_files_count": 1, "added_rows_count": 20,
+        "existing_rows_count": 30, "deleted_rows_count": 5,
+    }
+    sparse = _mlist_carry(
+        {"manifest_path": "m.avro", "sequence_number": 4,
+         "added_files_count": None, "content": 1}
+    )
+    assert sparse == {
+        "manifest_path": "m.avro", "manifest_length": 0,
+        "partition_spec_id": 0, "content": 1, "sequence_number": 4,
+        "min_sequence_number": 4, "added_snapshot_id": 0,
+        "added_files_count": 0, "existing_files_count": 0,
+        "deleted_files_count": 0, "added_rows_count": 0,
+        "existing_rows_count": 0, "deleted_rows_count": 0,
+    }
+
+
+def test_every_v2_writer_keeps_snapshot_invariants(spark, tmp_path):
+    t = _Table(spark, str(tmp_path / "ice"))
+    rows = [(i, f"v{i}", i) for i in range(6)]
+    write_iceberg(t.df(rows), t.root)
+    t.upsert(rows)
+    t.check()
+
+    rows = [(i, f"v{i}", i) for i in range(6, 10)]
+    write_iceberg(t.df(rows), t.root, mode="append")
+    t.upsert(rows)
+    t.check()
+
+    rows = [(i, f"o{i}", 10 + i) for i in range(8)]
+    write_iceberg(t.df(rows), t.root, mode="overwrite")
+    t.model = t.model.iloc[0:0]
+    t.upsert(rows)
+    assert t.check()["summary"]["operation"] == "overwrite"
+
+    rows = [(1, "c1", 1), (20, "c20", 20)]
+    merge_iceberg(t.df(rows), t.root, key="id", strategy="cow")
+    t.upsert(rows)
+    t.check()
+
+    rows = [(2, "m2", 2), (21, "m21", 21)]
+    merge_iceberg(t.df(rows), t.root, key="id", strategy="mor")
+    t.upsert(rows)
+    assert t.check()["summary"]["added-position-deletes"] == "1"
+
+    assert compact_iceberg(spark, t.root) is not None
+    assert t.check()["summary"]["removed-delete-files"] == "1"
+
+    _sid, stats = binpack_iceberg(spark, t.root)
+    assert stats["removed"] >= 2 and stats["added"] == 1
+    t.check()
+
+    rows = [(30, "a30", 30)]
+    write_iceberg(t.df(rows), t.root, mode="append")
+    t.upsert(rows)
+    t.check()
+    _sid, stats = zorder_iceberg(spark, t.root, ["id", "n"])
+    assert stats["removed"] == 2
+    t.check()
+
+    _sid, n = delete_iceberg_where(spark, t.root, [("n", ">=", 20)])
+    assert n == int((t.model.n >= 20).sum())
+    t.model = t.model[t.model.n < 20]
+    t.check()
+
+    _sid, n = update_iceberg_where(
+        spark, t.root, [("id", "<", 3)], {"val": "concat(val, '!')"}
+    )
+    hit = t.model.id < 3
+    assert n == int(hit.sum())
+    t.model = t.model.assign(val=t.model.val.where(~hit, t.model.val + "!"))
+    t.check()
+
+    write_iceberg_equality_deletes(spark.createDataFrame([(4,)], "id long"), t.root, "id")
+    t.model = t.model[t.model.id != 4]
+    t.check()
+
+    _sid, stats = rewrite_iceberg_manifests(t.root)
+    assert stats["merged"] >= 2 and stats["created"] == 1
+    t.check()
+
+    _sid, n = truncate_iceberg(t.root)
+    assert n is None  # a live equality delete makes the count inexact
+    t.model = t.model.iloc[0:0]
+    t.check()
+
+
+def test_v3_writers_keep_row_lineage_and_manifest_headers(spark, tmp_path):
+    t = _Table(spark, str(tmp_path / "ice3"))
+    rows = [(i, f"v{i}", i) for i in range(10)]
+    write_iceberg(t.df(rows), t.root)
+    t.upsert(rows)
+    t.check()
+    upgrade_iceberg_v2_to_v3(t.root)
+    t.meta = _iceberg_current_metadata(t.root)
+
+    rows = [(i, f"v{i}", i) for i in range(10, 15)]
+    write_iceberg(t.df(rows), t.root, mode="append")
+    t.upsert(rows)
+    t.check(added_rows=5)
+
+    write_iceberg_deletion_vectors(
+        spark.createDataFrame([(2,), (11,)], "id long"), t.root, keys="id"
+    )
+    t.model = t.model[~t.model.id.isin([2, 11])]
+    assert t.check()["summary"]["added-dvs"] == "2"
+
+    # The rewritten data and retired delete manifests are v3-shaped and
+    # say so in their headers.
+    assert compact_iceberg(spark, t.root) is not None
+    t.check()
+    _sid, stats = binpack_iceberg(spark, t.root)
+    assert stats == {"removed": 2, "added": 1}
+    t.check()
+
+
+def test_main_branch_ref_follows_every_commit(spark, tmp_path):
+    """Native writers record the current snapshot as the ``main`` branch
+    head as well, and native readers refuse metadata where the two
+    disagree: every commit moves both."""
+    root = str(tmp_path / "ice")
+    write_iceberg(spark.createDataFrame([(1, "a", 1)], SCHEMA), root)
+    chosen, meta = _iceberg_current_metadata_named(root)
+    meta["refs"] = {
+        "main": {"snapshot-id": meta["current-snapshot-id"], "type": "branch"}
+    }
+    with open(os.path.join(root, "metadata", chosen), "w", encoding="utf-8") as f:
+        json.dump(meta, f)
+
+    def main_ref():
+        meta = _iceberg_current_metadata(root)
+        assert meta["refs"]["main"]["snapshot-id"] == meta["current-snapshot-id"]
+        assert meta["refs"]["main"]["type"] == "branch"
+        return meta["current-snapshot-id"]
+
+    s1 = write_iceberg(
+        spark.createDataFrame([(2, "b", 2)], SCHEMA), root, mode="append"
+    )
+    assert main_ref() == s1
+    s2 = merge_iceberg(spark.createDataFrame([(1, "A", 1)], SCHEMA), root, key="id")
+    assert main_ref() == s2
+    rollback_iceberg(root, s1)
+    assert main_ref() == s1

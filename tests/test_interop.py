@@ -4370,7 +4370,7 @@ def _hudi_log_mod():
     return hudi_log
 
 
-def test_hudi_log_block_golden_bytes():
+def test_hudi_log_block_golden_bytes(tmp_path):
     """write_log_file must emit the exact HoodieLogFormat framing:
     magic, BE block length, version, type ordinal, header map, content
     length, content, footer map, trailing total length — byte-for-byte
@@ -4404,9 +4404,7 @@ def test_hudi_log_block_golden_bytes():
         + _st.pack(">q", total_len)
     )
 
-    import tempfile
-
-    p = os.path.join(tempfile.mkdtemp(), "golden.log.1")
+    p = str(tmp_path / "golden.log.1")
     blk = HL.LogBlock(
         HL.AVRO_DATA_BLOCK,
         header={HL.INSTANT_TIME: "123", HL.SCHEMA: json.dumps(avsc)},
@@ -4423,12 +4421,11 @@ def test_hudi_log_block_golden_bytes():
     assert recs == [{"k": "a"}]
 
 
-def test_hudi_log_reader_refuses_corruption():
+def test_hudi_log_reader_refuses_corruption(tmp_path):
     import struct as _st
-    import tempfile
 
     HL = _hudi_log_mod()
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     bad_magic = os.path.join(d, "bad1.log.1")
     with open(bad_magic, "wb") as f:
         f.write(b"#NOPE#" + b"\x00" * 20)

@@ -4,7 +4,6 @@ timings), so a later refactor can't silently regress them."""
 
 import os
 import re
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,7 +57,7 @@ def test_pq_topk_all_is_exact_and_plans_topk(spark):
         pq_topk(enc, books, qvec, k=10, rerank="bogus")
 
 
-def test_spread_width_decision(spark):
+def test_spread_width_decision(spark, tmp_path):
     """_spread must judge width with Spark's split-packing math, not
     the raw file count (r18 verdict #2): a single tiny file estimates
     to one split and repartitions; the same file under a small
@@ -74,7 +73,7 @@ def test_spread_width_decision(spark):
     # below the 4 MB open cost (one split by default), and the
     # maxPartitionBytes below cuts it into >= 2x parallelism splits.
     par = spark.sparkContext.defaultParallelism
-    tmp = tempfile.mkdtemp(prefix="tdl_spread_")
+    tmp = str(tmp_path)
     spark.range(250 * max(8, par)).select(
         F.col("id").alias("vec_id"),
         F.array(*[F.rand(i) for i in range(8)]).alias("embedding"),

@@ -1690,16 +1690,15 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 
-def _gen_delta_with_generated(spark, k):
-    """A foreign Delta table whose 'y' is generated as x * k (writer
-    version 4), built the way a native writer leaves it."""
+def _gen_delta_with_generated(spark, k, root):
+    """A foreign Delta table under ``root`` whose 'y' is generated as
+    x * k (writer version 4), built the way a native writer leaves it."""
     import json as _json
     import os as _os
-    import tempfile
 
     from automation_of_building_a_transactional_data_lake_spark.formats.interop import write_delta
 
-    p = _os.path.join(tempfile.mkdtemp(prefix="tdl_sqlprop_"), "t")
+    p = _os.path.join(root, "t")
     write_delta(
         spark.createDataFrame([(0, 0)], "x long, y long"), p
     )
@@ -1734,7 +1733,7 @@ def _gen_delta_with_generated(spark, k):
     xs1=st.lists(st.integers(51, 120), min_size=1, max_size=3, unique=True),
     d=st.integers(-10, 10),
 )
-def test_sql_constraint_generated_dml_property(spark, k, xs0, t, xs1, d):
+def test_sql_constraint_generated_dml_property(spark, tmp_path, k, xs0, t, xs1, d):
     """r15 (verdict #7): the ALTER TABLE ADD CONSTRAINT → violating
     DML refuses → conforming DML passes sequence, as a property over
     generated expressions. The model: y is generated as x * k; a CHECK
@@ -1752,8 +1751,14 @@ def test_sql_constraint_generated_dml_property(spark, k, xs0, t, xs1, d):
     from automation_of_building_a_transactional_data_lake_spark.formats.interop import read_delta
     from automation_of_building_a_transactional_data_lake_spark.sql import LakeSQL
 
-    lake = LakeSQL(Catalog(spark, __import__("tempfile").mkdtemp(prefix="wh_")))
-    p = _gen_delta_with_generated(spark, k)
+    # tmp_path is shared by every generated example: each one takes
+    # fresh directories under it.
+    import tempfile
+
+    lake = LakeSQL(Catalog(spark, tempfile.mkdtemp(prefix="wh_", dir=tmp_path)))
+    p = _gen_delta_with_generated(
+        spark, k, tempfile.mkdtemp(prefix="tdl_sqlprop_", dir=tmp_path)
+    )
     # Seed rows (x=0 from creation is row zero; append the xs0 batch
     # through the surface, generated column computed).
     vals = ", ".join(f"({x})" for x in xs0)
