@@ -445,8 +445,9 @@ def _delta_guard_writer(protocol: dict | None, meta: dict | None, mode: str) -> 
         # Feature FLAGS whose demands the scans above verify (or whose
         # semantics this writer's adds/removes cannot violate):
         # deletionVectors is fully honored: merge_delta WRITES DVs
-        # (strategy auto|dv), existing DVs are excluded from merge
-        # scans, and removes drop whole files with their vectors.
+        # (strategy auto|dv), existing DVs are excluded from every
+        # writer's scan, and every remove names the deletion vector of
+        # the add it retires (log replay keys a file on path + DV id).
         honored = {
             "appendOnly", "changeDataFeed", "invariants", "checkConstraints",
             "generatedColumns", "identityColumns", "columnMapping",
@@ -564,10 +565,8 @@ def add_delta_constraint(
     version."""
     if not re.fullmatch(r"\w+", name):
         raise ValueError(f"constraint name {name!r} must be alphanumeric")
-    state = _delta_replay(table_path, None)
-    meta = state["metaData"]
-    _delta_guard_writer(state["protocol"], meta, "append")
-    conf = dict(meta.get("configuration") or {})
+    tx = _delta_open(spark, table_path, "append")
+    conf = dict(tx.conf)
     key = f"delta.constraints.{name.lower()}"
     if key in conf:
         raise ValueError(f"constraint {name!r} already exists: {conf[key]}")
@@ -580,9 +579,7 @@ def add_delta_constraint(
             f"{bad[0].asDict()} violates ({expr})"
         )
     conf[key] = expr
-    new_meta = dict(meta)
-    new_meta["configuration"] = conf
-    proto = dict(state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2})
+    proto = dict(tx.protocol or {"minReaderVersion": 1, "minWriterVersion": 2})
     actions: list[dict] = []
     if int(proto.get("minWriterVersion", 1)) < 3 and "writerFeatures" not in proto:
         proto["minWriterVersion"] = 3
@@ -593,28 +590,23 @@ def add_delta_constraint(
             set(proto["writerFeatures"]) | {"checkConstraints"}
         )
         actions.append({"protocol": proto})
-    actions.append({"metaData": new_meta})
-    return _delta_commit(
-        table_path, state["version"] + 1, actions, "ADD CONSTRAINT",
-        {"name": name.lower(), "expr": expr},
+    actions.append({"metaData": {**tx.meta, "configuration": conf}})
+    return tx.commit(
+        actions, "ADD CONSTRAINT", {"name": name.lower(), "expr": expr}
     )
 
 
 def drop_delta_constraint(table_path: str, name: str) -> int:
     """``ALTER TABLE ... DROP CONSTRAINT name`` — metadata-only.
     Returns the committed version."""
-    state = _delta_replay(table_path, None)
-    meta = state["metaData"]
-    _delta_guard_writer(state["protocol"], meta, "append")
-    conf = dict(meta.get("configuration") or {})
+    tx = _delta_open(None, table_path, "append")
+    conf = dict(tx.conf)
     key = f"delta.constraints.{name.lower()}"
     if key not in conf:
         raise KeyError(f"no CHECK constraint {name!r} on {table_path}")
     del conf[key]
-    new_meta = dict(meta)
-    new_meta["configuration"] = conf
-    return _delta_commit(
-        table_path, state["version"] + 1, [{"metaData": new_meta}],
+    return tx.commit(
+        [{"metaData": {**tx.meta, "configuration": conf}}],
         "DROP CONSTRAINT", {"name": name.lower()},
     )
 
@@ -2217,11 +2209,18 @@ def _delta_physical_batch(df: DataFrame, schema: StructType) -> DataFrame:
 
 
 def _delta_stage_files(
-    df: DataFrame, table_path: str, partition_by: list[str]
+    df: DataFrame,
+    table_path: str,
+    partition_by: list[str],
+    data_change: bool = True,
+    cdc: bool = False,
 ) -> list[dict]:
     """Write the batch's parquet through Spark into a hidden staging
     dir, then move each file to its final (hive-conventional) location
-    under a fresh uuid name; returns the add actions."""
+    under a fresh uuid name; returns the add actions. With ``cdc`` the
+    batch is CDF capture (business columns + ``_change_type``): files
+    land under ``_change_data/`` and the returned actions are the cdc
+    actions a CDF-enabled table's readers treat as authoritative."""
     staging = os.path.join(table_path, f".staging-{uuid.uuid4().hex}")
     writer = df.write.mode("overwrite")
     if partition_by:
@@ -2243,7 +2242,7 @@ def _delta_stage_files(
                             None if v == "__HIVE_DEFAULT_PARTITION__"
                             else urllib.parse.unquote(v)
                         )
-                stats = _delta_file_stats(os.path.join(root, fname))
+                stats = {} if cdc else _delta_file_stats(os.path.join(root, fname))
                 if stats.get("numRecords") == 0:
                     # Spark's empty input partitions leave zero-row
                     # part files; committing them adds dead stat-less
@@ -2252,7 +2251,9 @@ def _delta_stage_files(
                     # file: unknown is not empty.)
                     continue
                 final_rel = os.path.join(
-                    "" if rel_dir == "." else rel_dir, f"part-{uuid.uuid4().hex}.parquet"
+                    "_change_data" if cdc else "",
+                    "" if rel_dir == "." else rel_dir,
+                    f"{'cdc' if cdc else 'part'}-{uuid.uuid4().hex}.parquet",
                 )
                 final_abs = os.path.join(table_path, final_rel)
                 os.makedirs(os.path.dirname(final_abs), exist_ok=True)
@@ -2261,9 +2262,12 @@ def _delta_stage_files(
                     "path": urllib.parse.quote(final_rel.replace(os.sep, "/")),
                     "partitionValues": pv,
                     "size": os.path.getsize(final_abs),
-                    "modificationTime": int(time.time() * 1000),
-                    "dataChange": True,
                 }
+                if cdc:
+                    adds.append({**add, "dataChange": False})
+                    continue
+                add["modificationTime"] = int(time.time() * 1000)
+                add["dataChange"] = data_change
                 if stats:
                     # Per-file stats: Delta readers drive FILE
                     # SKIPPING off these (numRecords also powers
@@ -2277,6 +2281,197 @@ def _delta_stage_files(
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return adds
+
+
+def _delta_file_key(add: dict) -> tuple:
+    """The logical-file key Delta's log replay uses: the path plus the
+    unique id of the file's deletion vector, if any."""
+    dv = add.get("deletionVector") or {}
+    return (add["path"], dv.get("storageType"), dv.get("pathOrInlineDv"), dv.get("offset"))
+
+
+class _DeltaTxn:
+    """One Delta commit, in the role of Delta's ``OptimisticTransaction``.
+    It holds what every writer derives from the log before staging
+    anything: the replayed snapshot (``version``, live ``files`` by log
+    path, ``meta``, ``protocol``, ``conf``), the Spark ``schema`` with
+    its ``cols`` and partition columns ``pcols``, the column-mapping and
+    CDF flags, and the commit timestamp. ``scan`` reads live files with
+    their existing deletion vectors applied, ``remove`` retires one,
+    ``stage`` / ``stage_cdc`` write new data and capture files, and
+    ``commit`` publishes the next log entry. Writers open one with
+    ``_delta_open``."""
+
+    def __init__(
+        self, spark: SparkSession | None, table_path: str, state: dict, mode: str
+    ) -> None:
+        _delta_guard_writer(state["protocol"], state["metaData"], mode)
+        self.spark, self.table_path = spark, table_path
+        self.version, self.files = state["version"], state["files"]
+        self.protocol = state["protocol"]
+        self.ts = int(time.time() * 1000)
+        self.evolve(state["metaData"])
+
+    def evolve(self, meta: dict) -> None:
+        """Make ``meta`` the metadata every later scan and stage of this
+        commit runs under (a merge's schema evolution)."""
+        self.meta = meta
+        self.conf = meta.get("configuration") or {}
+        self.schema = StructType.fromJson(json.loads(meta["schemaString"]))
+        self.cols = [f.name for f in self.schema.fields]
+        self.pcols = list(meta.get("partitionColumns") or [])
+        self.cm_on = self.conf.get("delta.columnMapping.mode", "none") in ("name", "id")
+        self.cdf = self.conf.get("delta.enableChangeDataFeed", "false").lower() == "true"
+        self.phys = {
+            f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
+            for f in self.schema.fields
+        }
+        # Partition directories and partitionValues keys are physical
+        # names on a column-mapped table.
+        self.stage_pcols = [self.phys[c] for c in self.pcols] if self.cm_on else self.pcols
+        self._resolution = None
+
+    @property
+    def resolution(self) -> tuple[StructType, dict, dict, SparkSession]:
+        """``_delta_file_resolution`` of the current schema."""
+        if self._resolution is None:
+            self._resolution = _delta_file_resolution(
+                self.spark, self.meta, self.schema, self.pcols
+            )
+        return self._resolution
+
+    def abspath(self, rel: str) -> str:
+        return os.path.abspath(os.path.join(self.table_path, urllib.parse.unquote(rel)))
+
+    @functools.cached_property
+    def dv_pairs(self) -> tuple[DataFrame, DataFrame] | None:
+        """(frame, join side) of the deleted (``__fp``, ``__ri``) pairs
+        of every live deletion vector, decoded in executors; None when
+        no live file carries one. A caller that scans several times
+        persists the frame."""
+        dvs = {
+            self.abspath(p): a["deletionVector"]
+            for p, a in self.files.items()
+            if a.get("deletionVector")
+        }
+        if not dvs:
+            return None
+        frame, paths, inline = _delta_dv_pairs_frame(self.spark, dvs, self.table_path)
+        return frame, _delete_side(frame, paths, inline)
+
+    @functools.cached_property
+    def _hive_layout(self) -> bool:
+        return _delta_hive_conventional(list(self.files.values()), self.stage_pcols)
+
+    def scan(self, rels: list[str]) -> DataFrame:
+        """Logical rows of the live files ``rels`` (log paths), each with
+        its absolute file path ``__fp`` and row index ``__ri``, existing
+        deletion vectors anti-joined. The layout rule is ``read_delta``'s:
+        one discovery scan when the partition directories follow the
+        hive convention, else one scan per partition group with the
+        partition values as literals."""
+        file_schema, read_names, phys, rsess = self.resolution
+        ids = [
+            _norm_file_path(F.col("_metadata.file_path")).alias("__fp"),
+            F.col("_metadata.row_index").alias("__ri"),
+        ]
+        if not self.pcols or self._hive_layout:
+            scan_schema, sel = (
+                _delta_mapped_scan_parts(
+                    self.meta, self.schema, self.pcols, file_schema, read_names, phys
+                )
+                if self.cm_on
+                else (self.schema, {c: c for c in self.cols})
+            )
+            rdr = rsess.read.schema(scan_schema)
+            if self.pcols:
+                rdr = rdr.option("basePath", self.table_path)
+            parts = [
+                rdr.parquet(*[self.abspath(r) for r in rels]).select(
+                    *[F.col(sel[c]).alias(c) for c in self.cols], *ids
+                )
+            ]
+        else:
+            types = {f.name: f.dataType for f in self.schema.fields}
+            groups: dict[tuple, list[str]] = {}
+            for r in rels:
+                pv = self.files[r]["partitionValues"]
+                key = tuple(pv.get(phys[c]) for c in self.pcols)
+                groups.setdefault(key, []).append(self.abspath(r))
+            parts = []
+            for key, paths in sorted(
+                groups.items(), key=lambda kv: [(v is not None, v or "") for v in kv[0]]
+            ):
+                pv = dict(zip(self.pcols, key))
+                parts.append(
+                    rsess.read.schema(file_schema).parquet(*paths).select(
+                        *[
+                            (
+                                F.lit(pv[c]).cast(types[c])
+                                if c in pv
+                                else F.col(read_names[c])
+                            ).alias(c)
+                            for c in self.cols
+                        ],
+                        *ids,
+                    )
+                )
+        df = functools.reduce(DataFrame.unionByName, parts)
+        if any(self.files[r].get("deletionVector") for r in rels):
+            df = df.join(self.dv_pairs[1], ["__fp", "__ri"], "left_anti")
+        return df
+
+    def remove(self, rel: str, data_change: bool = True) -> dict:
+        """The remove action retiring live file ``rel``. It names the
+        file's deletion vector: log replay keys a logical file on (path,
+        deletion-vector id)."""
+        rm = {"path": rel, "deletionTimestamp": self.ts, "dataChange": data_change}
+        dv = self.files[rel].get("deletionVector")
+        if dv:
+            rm["deletionVector"] = dv
+        return {"remove": rm}
+
+    def _physical(self, df: DataFrame, schema: StructType) -> DataFrame:
+        return _delta_physical_batch(df, schema) if self.cm_on else df
+
+    def stage(self, df: DataFrame, data_change: bool = True) -> list[dict]:
+        """Stage the logical rows ``df`` as new data files; returns their
+        add actions."""
+        return [
+            {"add": a}
+            for a in _delta_stage_files(
+                self._physical(df, self.schema), self.table_path,
+                self.stage_pcols, data_change,
+            )
+        ]
+
+    def stage_cdc(self, df: DataFrame) -> list[dict]:
+        """Stage CDF capture rows (the columns + ``_change_type``);
+        returns their cdc actions, or [] when the table's change data
+        feed is off."""
+        if not self.cdf:
+            return []
+        from pyspark.sql.types import StringType, StructField
+
+        # The _change_type column has no mapping metadata and keeps its
+        # own name.
+        schema = StructType([*self.schema.fields, StructField("_change_type", StringType())])
+        return [
+            {"cdc": c}
+            for c in _delta_stage_files(
+                self._physical(df, schema), self.table_path, self.stage_pcols, cdc=True
+            )
+        ]
+
+    def commit(self, actions: list[dict], operation: str, params: dict) -> int:
+        return _delta_commit(self.table_path, self.version + 1, actions, operation, params)
+
+
+def _delta_open(spark: SparkSession | None, table_path: str, mode: str) -> _DeltaTxn:
+    """Open a Delta commit on the table at ``table_path``: replay its log
+    once and run the writer guard for ``mode`` (append, merge or
+    overwrite). ``spark`` may be None for metadata-only commits."""
+    return _DeltaTxn(spark, table_path, _delta_replay(table_path, None), mode)
 
 
 def write_delta(
@@ -2310,7 +2505,7 @@ def write_delta(
         raise FileExistsError(f"Delta table already exists at {table_path}")
 
     actions: list[dict] = []
-    next_version = 0
+    tx = None
     if not exists:
         conf = dict(configuration or {})
         cdf_on = conf.get("delta.enableChangeDataFeed", "false").lower() == "true"
@@ -2358,69 +2553,38 @@ def write_delta(
                 }
             }
         )
+        actions += [{"add": a} for a in _delta_stage_files(df, table_path, partition_by)]
     else:
         if configuration:
             raise ValueError(
                 "configuration= applies at table CREATION only; this "
                 "writer does not alter an existing table's properties"
             )
-        state = _delta_replay(table_path, None)
-        _delta_guard_writer(state["protocol"], state["metaData"], mode)
+        tx = _delta_open(df.sparkSession, table_path, mode)
         # Generated columns compute-or-validate, then CHECK
         # constraints + invariants gate the incoming LOGICAL rows
-        # (before any physical renaming below).
-        df = _delta_apply_generated(df, state["metaData"])
-        tschema0 = StructType.fromJson(
-            json.loads(state["metaData"]["schemaString"])
-        )
-        if set(df.columns) == {f.name for f in tschema0.fields}:
-            df = df.select(*[f.name for f in tschema0.fields])
-        _delta_enforce_constraints(
-            df, state["metaData"].get("configuration"), state["metaData"]
-        )
-        next_version = state["version"] + 1
-        recorded_parts = list(state["metaData"].get("partitionColumns") or [])
-        if partition_by and partition_by != recorded_parts:
+        # (before the physical renaming of a column-mapped table).
+        df = _delta_apply_generated(df, tx.meta)
+        if set(df.columns) == set(tx.cols):
+            df = df.select(*tx.cols)
+        _delta_enforce_constraints(df, tx.conf, tx.meta)
+        if partition_by and partition_by != tx.pcols:
             raise ValueError(
-                f"table is partitioned by {recorded_parts}, not {partition_by}"
+                f"table is partitioned by {tx.pcols}, not {partition_by}"
             )
-        partition_by = recorded_parts
-        tbl_conf = state["metaData"].get("configuration") or {}
-        if tbl_conf.get("delta.columnMapping.mode", "none") in ("name", "id"):
-            # Column-mapped table: the batch stages under the frozen
-            # PHYSICAL names + parquet field ids so every mapped reader
-            # resolves it; partition dirs use physical names too.
-            tbl_schema = StructType.fromJson(
-                json.loads(state["metaData"]["schemaString"])
-            )
-            missing = [
-                f.name for f in tbl_schema.fields if f.name not in df.columns
-            ]
-            if missing:
-                raise ValueError(f"batch lacks table columns {missing}")
-            df = _delta_physical_batch(df, tbl_schema)
-            phys_map = {
-                f.name: (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", f.name
-                )
-                for f in tbl_schema.fields
-            }
-            partition_by = [phys_map[c] for c in partition_by]
+        partition_by = tx.pcols
+        missing = [c for c in tx.cols if c not in df.columns]
+        if tx.cm_on and missing:
+            raise ValueError(f"batch lacks table columns {missing}")
         if mode == "overwrite":
-            ts = int(time.time() * 1000)
-            for path in state["files"]:
-                actions.append(
-                    {"remove": {"path": path, "deletionTimestamp": ts,
-                                "dataChange": True}}
-                )
+            actions += [tx.remove(p) for p in tx.files]
+        actions += tx.stage(df)
 
-    adds = _delta_stage_files(df, table_path, partition_by)
-    actions.extend({"add": a} for a in adds)
     while True:
         try:
-            return _delta_commit(
-                table_path, next_version, actions, "WRITE", {"mode": mode}
-            )
+            if tx is None:
+                return _delta_commit(table_path, 0, actions, "WRITE", {"mode": mode})
+            return tx.commit(actions, "WRITE", {"mode": mode})
         except FileExistsError:
             # Another writer took this version. AddFile-only commits
             # never conflict under Delta's own OCC rules (nothing we
@@ -2431,9 +2595,7 @@ def write_delta(
             # surfaces the collision loudly.
             if mode != "append":
                 raise
-            state = _delta_replay(table_path, None)
-            _delta_guard_writer(state["protocol"], state["metaData"], mode)
-            next_version = state["version"] + 1
+            tx = _delta_open(df.sparkSession, table_path, mode)
             # Lost CREATE race (append on a not-yet-existing table):
             # the winner owns the table identity — REBUILD the actions
             # without our creation protocol/metaData instead of
@@ -2441,7 +2603,7 @@ def write_delta(
             # next version (r10 advice #3), refusing when our batch or
             # intent does not match what won.
             if any("protocol" in a or "metaData" in a for a in actions):
-                win = state["metaData"]
+                win = tx.meta
                 if json.loads(win["schemaString"]) != df.schema.jsonValue():
                     raise ValueError(
                         "lost the table-create race to a writer with a "
@@ -2470,54 +2632,6 @@ def write_delta(
 
 
 # -- Delta Lake: keyed MERGE (upsert / delete) on a foreign table -----------
-
-
-def _delta_stage_cdc(
-    df: DataFrame, table_path: str, partition_by: list[str]
-) -> list[dict]:
-    """Stage CDF rows (business columns + ``_change_type``) as parquet
-    under ``_change_data/`` and return the cdc actions — the capture a
-    CDF-enabled table's readers treat as authoritative."""
-    staging = os.path.join(table_path, f".staging-cdc-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    cdcs: list[dict] = []
-    try:
-        for root, dirs, files in os.walk(staging):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for fname in files:
-                if not fname.endswith(".parquet") or fname.startswith(("_", ".")):
-                    continue
-                rel_dir = os.path.relpath(root, staging)
-                pv: dict[str, str | None] = {}
-                if rel_dir != ".":
-                    for seg in rel_dir.split(os.sep):
-                        k, _, v = seg.partition("=")
-                        pv[k] = (
-                            None if v == "__HIVE_DEFAULT_PARTITION__"
-                            else urllib.parse.unquote(v)
-                        )
-                final_rel = os.path.join(
-                    "_change_data",
-                    "" if rel_dir == "." else rel_dir,
-                    f"cdc-{uuid.uuid4().hex}.parquet",
-                )
-                final_abs = os.path.join(table_path, final_rel)
-                os.makedirs(os.path.dirname(final_abs), exist_ok=True)
-                os.rename(os.path.join(root, fname), final_abs)
-                cdcs.append(
-                    {
-                        "path": urllib.parse.quote(final_rel.replace(os.sep, "/")),
-                        "partitionValues": pv,
-                        "size": os.path.getsize(final_abs),
-                        "dataChange": False,
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return cdcs
 
 
 def merge_delta(
@@ -2592,7 +2706,7 @@ def merge_delta(
     reconstruct the merge row-level. Duplicate source keys refuse
     loudly (the reference dedups with its latest-record window first,
     exactly like ``pipeline.apply_cdc_batch``). Non-hive partition
-    layouts raise — rewrite those with their native engine. Returns
+    layouts scan per partition group, as ``read_delta`` does. Returns
     the committed version (or the current version when the merge is a
     no-op); with ``return_stats=True`` returns ``(version,
     {"matched": n})`` where n is the rows the merge retired — FREE on
@@ -2605,23 +2719,10 @@ def merge_delta(
     if strategy not in ("auto", "rewrite", "dv"):
         raise ValueError(f"strategy must be auto|rewrite|dv, got {strategy!r}")
     spark = source.sparkSession
-    state = _delta_replay(table_path, None)
-    meta = state["metaData"]
-    _delta_guard_writer(state["protocol"], meta, "merge")
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = list(meta.get("partitionColumns") or [])
-    cols = [f.name for f in schema.fields]
-    if key not in cols:
-        raise ValueError(f"key {key!r} is not a table column ({cols})")
-    # Column-mapped tables (name/id mode; id+partitioned refused by
-    # the writer guard): scans read the PHYSICAL columns aliased back
-    # to logical (_delta_file_resolution, the read path's own
-    # machinery), every staged batch renames to physical + field ids,
-    # and partition dirs/keys use physical names.
-    cm_on = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    ) in ("name", "id")
-    dv_ok = _delta_dv_supported(state["protocol"])
+    tx = _delta_open(spark, table_path, "merge")
+    if key not in tx.cols:
+        raise ValueError(f"key {key!r} is not a table column ({tx.cols})")
+    dv_ok = _delta_dv_supported(tx.protocol)
     if strategy == "dv" and not dv_ok:
         raise NotImplementedError(
             "strategy='dv' needs the table protocol to carry the "
@@ -2630,25 +2731,10 @@ def merge_delta(
             "native engine (this writer never upgrades a foreign "
             "table's protocol implicitly)"
         )
-    adds = list(state["files"].items())
-    _phys0 = {
-        f.name: (f.metadata or {}).get(
-            "delta.columnMapping.physicalName", f.name
-        )
-        for f in schema.fields
-    }
-    if adds and pcols and not _delta_hive_conventional(
-        [a for _p, a in adds],
-        [_phys0[c] for c in pcols] if cm_on else pcols,
-    ):
-        raise NotImplementedError(
-            "merge requires a hive-conventional partition layout "
-            "(non-hive foreign layouts: use the table's native engine)"
-        )
 
-    evolved_meta = None
+    actions: list[dict] = []
     if mode == "upsert":
-        extra = _merge_source_extra(source, cols, evolve, "Delta autoMerge")
+        extra = _merge_source_extra(source, tx.cols, evolve, "Delta autoMerge")
         if extra:
             # Schema evolution, the autoMerge the reference's CDC jobs
             # rely on (src/delta/delta-initial-load.py:33): the new
@@ -2660,47 +2746,41 @@ def merge_delta(
             from pyspark.sql.types import StructField
 
             src_types = {f.name: f.dataType for f in source.schema.fields}
-            evolved_meta = dict(meta)
-            cm_next_id = None
-            if cm_on:
-                cm_conf = dict(meta.get("configuration") or {})
-                cm_next_id = int(
-                    cm_conf.get("delta.columnMapping.maxColumnId", 0)
-                )
+            schema = tx.schema
+            next_id = int(tx.conf.get("delta.columnMapping.maxColumnId", 0))
             for c in sorted(extra, key=source.columns.index):
                 md = None
-                if cm_on:
+                if tx.cm_on:
                     # Mapped tables: every column needs a frozen
                     # physical name and a fresh never-reused id.
-                    cm_next_id += 1
+                    next_id += 1
                     md = {
-                        "delta.columnMapping.id": cm_next_id,
+                        "delta.columnMapping.id": next_id,
                         "delta.columnMapping.physicalName":
                             f"col-{uuid.uuid4()}",
                     }
                 schema = schema.add(
                     StructField(c, src_types[c], True, metadata=md)
                 )
-            cols = [f.name for f in schema.fields]
-            if cm_on:
-                cm_conf["delta.columnMapping.maxColumnId"] = str(cm_next_id)
-                evolved_meta["configuration"] = cm_conf
-            evolved_meta["schemaString"] = json.dumps(schema.jsonValue())
-        src = source.select(*cols)
+            evolved = {**tx.meta, "schemaString": json.dumps(schema.jsonValue())}
+            if tx.cm_on:
+                evolved["configuration"] = {
+                    **tx.conf, "delta.columnMapping.maxColumnId": str(next_id)
+                }
+            tx.evolve(evolved)
+            actions.append({"metaData": evolved})
         # Generated columns validate, then CHECK constraints +
         # invariants gate the incoming rows (deletes can't introduce
         # a violating value).
-        src = _delta_apply_generated(src, meta).select(*cols)
-        _delta_enforce_constraints(src, meta.get("configuration"), meta)
+        src = _delta_apply_generated(source.select(*tx.cols), tx.meta).select(*tx.cols)
+        _delta_enforce_constraints(src, tx.conf, tx.meta)
     else:
         if key not in source.columns:
             raise ValueError(f"delete source lacks the key column {key!r}")
         src = source.select(key)
+    cols = tx.cols
 
-    abs_by_log = {
-        os.path.abspath(os.path.join(table_path, urllib.parse.unquote(p))): p
-        for p, _a in adds
-    }
+    rel_of = {tx.abspath(p): p for p in tx.files}
     # EXISTING deletion vectors: only the DESCRIPTORS stay driver-side
     # (metadata-sized; their `cardinality` field gives the per-file
     # prior count the planner needs). The positions themselves decode
@@ -2709,13 +2789,11 @@ def merge_delta(
     # rows neither match keys nor get resurrected by a rewrite, and a
     # table with 10^9 accumulated deleted rows never materializes them
     # on the driver.
-    dv_desc: dict[str, dict] = {}
-    for p, a in adds:
-        if a.get("deletionVector"):
-            apath = os.path.abspath(
-                os.path.join(table_path, urllib.parse.unquote(p))
-            )
-            dv_desc[apath] = a["deletionVector"]
+    dv_desc = {
+        fp: tx.files[p]["deletionVector"]
+        for fp, p in rel_of.items()
+        if tx.files[p].get("deletionVector")
+    }
     prior_card: dict[str, int] = {}
     for fp, dv in dv_desc.items():
         if dv.get("cardinality") is None:
@@ -2726,57 +2804,9 @@ def merge_delta(
                 "cardinality (required by the Delta protocol)"
             )
         prior_card[fp] = int(dv["cardinality"])
-    del_pairs = None
-    dv_paths: list[str] = []
-    dv_inline = 0
-    if dv_desc:
-        del_pairs, dv_paths, dv_inline = _delta_dv_pairs_frame(
-            spark, dv_desc, table_path
-        )
-
-    cm_pcols = pcols
-    cm_rsess = spark
-    if cm_on:
-        cm_file_schema, cm_read_names, cm_phys, cm_rsess = (
-            _delta_file_resolution(spark, meta, schema, pcols)
-        )
-        cm_pcols = [cm_phys[c] for c in pcols]
-        # Partitioned: ONE discovery scan over the physical hive dirs
-        # (name mode all-physical; id mode field-id data resolution +
-        # physical partition dirs — _delta_mapped_scan_parts).
-        cm_scan_schema, cm_sel = _delta_mapped_scan_parts(
-            meta, schema, pcols, cm_file_schema, cm_read_names, cm_phys
-        )
 
     def _scan(paths: list[str]) -> DataFrame:
-        if cm_on:
-            rdr = cm_rsess.read.schema(cm_scan_schema)
-            if pcols:
-                rdr = rdr.option("basePath", table_path)
-            df = rdr.parquet(*paths).select(
-                *[
-                    F.col(cm_sel[f.name]).alias(f.name)
-                    for f in schema.fields
-                ],
-                _norm_file_path(F.col("_metadata.file_path")).alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-            )
-        else:
-            rdr = spark.read.schema(schema)
-            if pcols:
-                rdr = rdr.option("basePath", table_path)
-            df = rdr.parquet(*paths).select(
-                *cols,
-                _norm_file_path(F.col("_metadata.file_path")).alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-            )
-        if del_pairs is not None:
-            df = df.join(
-                _delete_side(del_pairs, dv_paths, dv_inline),
-                ["__fp", "__ri"],
-                "left_anti",
-            )
-        return df
+        return tx.scan([rel_of[fp] for fp in paths])
 
     # Size-gated, pinned key frame (round-9 verdict #2: a forced
     # broadcast of a backfill-sized batch is a latent executor OOM);
@@ -2784,6 +2814,7 @@ def merge_delta(
     keys, keys_pin = _pin_keys(
         src.select(key), key, _MERGE_DUP_ERROR if mode == "upsert" else None
     )
+    del_pairs = tx.dv_pairs[0] if tx.dv_pairs else None
     if del_pairs is not None:
         # Every scan below anti-joins the existing DVs: decode them
         # once per merge (in executors; the pairs stay distributed).
@@ -2793,9 +2824,9 @@ def merge_delta(
     mk_pin = None
     try:
         counts: dict[str, tuple[int, int]] | None = {}
-        if abs_by_log:
+        if rel_of:
             counts = _merge_file_counts(
-                _scan(list(abs_by_log)), keys, key, max_affected_files
+                _scan(list(rel_of)), keys, key, max_affected_files
             )
             if counts is None and strategy == "dv":
                 raise ValueError(
@@ -2818,10 +2849,10 @@ def merge_delta(
             # file retires and survivors come from one DV-applied
             # scan. O(1) driver rows beyond the file list the log
             # replay already holds.
-            allscan = _scan(list(abs_by_log))
+            allscan = _scan(list(rel_of))
             old_matched = allscan.join(keys, key, "left_semi").select(*cols)
             survivors = allscan.join(keys, key, "left_anti").select(*cols)
-            rewrite_paths = sorted(abs_by_log)
+            rewrite_paths = sorted(rel_of)
             if return_stats:
                 matched_n = old_matched.count()
         elif counts:
@@ -2848,30 +2879,15 @@ def merge_delta(
                 )
         elif mode == "delete":
             # nothing matched: no-op
-            return (
-                (state["version"], {"matched": 0})
-                if return_stats
-                else state["version"]
-            )
+            return (tx.version, {"matched": 0}) if return_stats else tx.version
 
         new_df = survivors
         if mode == "upsert":
             new_df = src if survivors is None else survivors.unionByName(src)
 
-        actions: list[dict] = []
-        if evolved_meta is not None:
-            actions.append({"metaData": evolved_meta})
-        ts = int(time.time() * 1000)
-        for apath in sorted(rewrite_paths) + sorted(dead):
-            actions.append(
-                {
-                    "remove": {
-                        "path": abs_by_log[apath],
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                    }
-                }
-            )
+        actions += [
+            tx.remove(rel_of[fp]) for fp in sorted(rewrite_paths) + sorted(dead)
+        ]
         if dv_new:
             # A new DV unions the file's OLD positions; decoding those
             # few files' DVs driver-side here is budget-bounded — the
@@ -2892,21 +2908,12 @@ def merge_delta(
                 },
             )
             for fp in sorted(dv_new):
-                old = state["files"][abs_by_log[fp]]
-                actions.append(
-                    {
-                        "remove": {
-                            "path": abs_by_log[fp],
-                            "deletionTimestamp": ts,
-                            "dataChange": True,
-                        }
-                    }
-                )
+                old = tx.files[rel_of[fp]]
                 newadd = {
-                    "path": abs_by_log[fp],
-                    "partitionValues": _norm_pv(old.get("partitionValues")),
+                    "path": rel_of[fp],
+                    "partitionValues": old["partitionValues"],
                     "size": old.get("size", 0),
-                    "modificationTime": old.get("modificationTime", ts),
+                    "modificationTime": old.get("modificationTime", tx.ts),
                     "dataChange": True,
                     "deletionVector": descriptors[fp],
                 }
@@ -2914,23 +2921,11 @@ def merge_delta(
                     # Stats describe the PHYSICAL file, which is
                     # untouched; readers subtract DV cardinality.
                     newadd["stats"] = old["stats"]
-                actions.append({"add": newadd})
+                actions += [tx.remove(rel_of[fp]), {"add": newadd}]
         if new_df is not None:
-            staged_df = new_df.select(*cols)
-            if cm_on:
-                staged_df = _delta_physical_batch(staged_df, schema)
-            for a in _delta_stage_files(
-                staged_df, table_path, cm_pcols if cm_on else pcols
-            ):
-                actions.append({"add": a})
+            actions += tx.stage(new_df.select(*cols))
 
-        cdf = (
-            (meta.get("configuration") or {})
-            .get("delta.enableChangeDataFeed", "false")
-            .lower()
-            == "true"
-        )
-        if cdf:
+        if tx.cdf:
             ct = "_change_type"
             if mode == "delete":
                 cdc_df = old_matched.withColumn(ct, F.lit("delete"))
@@ -2948,43 +2943,18 @@ def merge_delta(
                 )
             else:
                 cdc_df = src.withColumn(ct, F.lit("insert"))
-            if cm_on:
-                # CDF capture files use physical names too; the
-                # _change_type column has no mapping metadata and
-                # keeps its own name.
-                from pyspark.sql.types import StringType, StructField
-
-                cdc_df = _delta_physical_batch(
-                    cdc_df,
-                    StructType(
-                        list(schema.fields)
-                        + [StructField(ct, StringType())]
-                    ),
-                )
-            for c in _delta_stage_cdc(
-                cdc_df, table_path, cm_pcols if cm_on else pcols
-            ):
-                actions.append({"cdc": c})
+            actions += tx.stage_cdc(cdc_df)
     finally:
         for pin in (keys_pin, mk_pin, del_pairs):
             if pin is not None:
                 pin.unpersist()
 
-    if not actions:
-        return (
-            (state["version"], {"matched": matched_n})
-            if return_stats
-            else state["version"]
+    version = tx.version
+    if actions:
+        version = tx.commit(
+            actions, "MERGE", {"mode": mode, "key": key, "strategy": strategy}
         )
-    next_version = _delta_commit(
-        table_path, state["version"] + 1, actions, "MERGE",
-        {"mode": mode, "key": key, "strategy": strategy},
-    )
-    return (
-        (next_version, {"matched": matched_n})
-        if return_stats
-        else next_version
-    )
+    return (version, {"matched": matched_n}) if return_stats else version
 
 
 def compact_delta(spark: SparkSession, table_path: str) -> int | None:
@@ -2995,82 +2965,18 @@ def compact_delta(spark: SparkSession, table_path: str) -> int | None:
     DV merges write O(changes) per batch, and the accumulated debt is
     paid here in one bounded pass over only the DV'd files. Returns
     the committed version, or None when no file carries a DV."""
-    state = _delta_replay(table_path, None)
-    meta = state["metaData"]
-    _delta_guard_writer(state["protocol"], meta, "merge")
-    dvd = {p: a for p, a in state["files"].items() if a.get("deletionVector")}
+    tx = _delta_open(spark, table_path, "merge")
+    dvd = sorted(p for p, a in tx.files.items() if a.get("deletionVector"))
     if not dvd:
         return None
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = list(meta.get("partitionColumns") or [])
-    cols = [f.name for f in schema.fields]
     # Whole-table accumulated DV cardinality decodes in EXECUTORS (r10
     # verdict #3 — the purge is exactly the moment a table's deleted
-    # rows peak), and the byte gate sees the REAL sidecar sizes.
-    dv_by_file = {
-        os.path.abspath(os.path.join(table_path, urllib.parse.unquote(p))):
-            a["deletionVector"]
-        for p, a in dvd.items()
-    }
-    paths = list(dv_by_file)
-    del_df, dv_paths, dv_inline = _delta_dv_pairs_frame(
-        spark, dv_by_file, table_path
-    )
-    cm_on = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    ) in ("name", "id")
-    cm_pcols = pcols
-    if cm_on:
-        cm_file_schema, cm_read_names, cm_phys, cm_rsess = (
-            _delta_file_resolution(spark, meta, schema, pcols)
-        )
-        cm_pcols = [cm_phys[c] for c in pcols]
-        cm_scan_schema, cm_sel = _delta_mapped_scan_parts(
-            meta, schema, pcols, cm_file_schema, cm_read_names, cm_phys
-        )
-        rdr = cm_rsess.read.schema(cm_scan_schema)
-        if pcols:
-            rdr = rdr.option("basePath", table_path)
-        scan = rdr.parquet(*sorted(paths)).select(
-            *[F.col(cm_sel[f.name]).alias(f.name) for f in schema.fields],
-            _norm_file_path(F.col("_metadata.file_path")).alias("__fp"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
-    else:
-        rdr = spark.read.schema(schema)
-        if pcols:
-            rdr = rdr.option("basePath", table_path)
-        scan = rdr.parquet(*sorted(paths)).select(
-            *cols,
-            _norm_file_path(F.col("_metadata.file_path")).alias("__fp"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
-    survivors = scan.join(
-        _delete_side(del_df, dv_paths, dv_inline), ["__fp", "__ri"], "left_anti"
-    ).select(*cols)
-    if cm_on:
-        survivors = _delta_physical_batch(survivors, schema)
-
-    actions: list[dict] = []
-    ts = int(time.time() * 1000)
-    for p in sorted(dvd):
-        actions.append(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": ts,
-                    # A purge changes no logical rows — CDF readers
-                    # must NOT see it as row-level change.
-                    "dataChange": False,
-                }
-            }
-        )
-    for a in _delta_stage_files(survivors, table_path, cm_pcols):
-        a["dataChange"] = False
-        actions.append({"add": a})
-    return _delta_commit(
-        table_path, state["version"] + 1, actions, "REORG", {"applyPurge": True}
-    )
+    # rows peak), and the byte gate sees the REAL sidecar sizes. A
+    # purge changes no logical rows: CDF readers must NOT see it as
+    # row-level change.
+    actions = [tx.remove(p, data_change=False) for p in dvd]
+    actions += tx.stage(tx.scan(dvd).select(*tx.cols), data_change=False)
+    return tx.commit(actions, "REORG", {"applyPurge": True})
 
 
 def _delta_rewrite_where(
@@ -3101,20 +3007,10 @@ def _delta_rewrite_where(
         )
     if assigns is not None and not assigns:
         raise ValueError("UPDATE requires at least one SET assignment")
-    state = _delta_replay(table_path, None)
-    meta = state["metaData"]
-    _delta_guard_writer(state["protocol"], meta, "merge")
-    conf = meta.get("configuration") or {}
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = list(meta.get("partitionColumns") or [])
-    ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
-    cols = [f.name for f in schema.fields]
-    cm_on = conf.get("delta.columnMapping.mode", "none") in ("name", "id")
-    file_schema, read_names, phys, rsess = _delta_file_resolution(
-        spark, meta, schema, pcols
-    )
+    tx = _delta_open(spark, table_path, "merge")
+    meta, schema, cols = tx.meta, tx.schema, tx.cols
     if assigns is not None:
-        have = {f.name for f in schema.fields}
+        have = set(cols)
         for c in assigns:
             if c not in have:
                 raise ValueError(
@@ -3126,73 +3022,19 @@ def _delta_rewrite_where(
             where_n, schema, spark.conf.get("spark.sql.session.timeZone", None)
         )
         candidates = [
-            a
-            for a in state["files"].values()
-            if _delta_prune_keep(a, schema, pcols, phys, preds_dom)
+            p
+            for p, a in tx.files.items()
+            if _delta_prune_keep(a, schema, tx.pcols, tx.phys, preds_dom)
         ]
     else:
-        candidates = list(state["files"].values())  # UPDATE without WHERE
+        candidates = list(tx.files)  # UPDATE without WHERE
     if not candidates:
-        return state["version"], 0
+        return tx.version, 0
 
-    # Candidate scan, typed per partition group (partitionValues keys
-    # are PHYSICAL names on mapped tables), with the file path
-    # attached so phase 2 can restrict the rewrite to TOUCHED files
-    # and DV positions can anti-join.
-    abs_of = {
-        a["path"]: os.path.abspath(
-            os.path.join(table_path, urllib.parse.unquote(a["path"]))
-        )
-        for a in candidates
-    }
-    dv_by_file = {
-        abs_of[a["path"]]: a["deletionVector"]
-        for a in candidates
-        if a.get("deletionVector")
-    }
-    groups: dict[tuple, list[str]] = {}
-    for add in candidates:
-        pv = add.get("partitionValues") or {}
-        key = tuple((c, pv.get(phys.get(c, c))) for c in pcols)
-        groups.setdefault(key, []).append(abs_of[add["path"]])
-    parts: list[DataFrame] = []
-    for key, paths in sorted(
-        groups.items(),
-        key=lambda kv: [(c, v is not None, v or "") for c, v in kv[0]],
-    ):
-        df = rsess.read.schema(file_schema).parquet(*paths)
-        gsel = []
-        for f in schema.fields:
-            if f.name in pcols:
-                raw = dict(key)[f.name]
-                gsel.append(
-                    (F.lit(raw) if raw is not None else F.lit(None))
-                    .cast(ptypes[f.name])
-                    .alias(f.name)
-                )
-            else:
-                gsel.append(F.col(read_names[f.name]).alias(f.name))
-        gsel.append(
-            _norm_file_path(F.col("_metadata.file_path")).alias("__fp")
-        )
-        gsel.append(F.col("_metadata.row_index").alias("__ri"))
-        parts.append(df.select(*gsel))
-    cand_df = parts[0]
-    for p in parts[1:]:
-        cand_df = cand_df.unionByName(p)
-    if dv_by_file:
-        # DV-marked rows are already logically deleted: drop them
-        # before the predicate ever sees them (executor-side decode,
-        # the compact_delta machinery).
-        del_df, dv_paths, dv_inline = _delta_dv_pairs_frame(
-            spark, dv_by_file, table_path
-        )
-        cand_df = cand_df.join(
-            _delete_side(del_df, dv_paths, dv_inline),
-            ["__fp", "__ri"],
-            "left_anti",
-        )
-    cand_df = cand_df.drop("__ri")
+    # Candidate scan with the file path attached, so phase 2 can
+    # restrict the rewrite to TOUCHED files; DV-marked rows are already
+    # logically deleted and never reach the predicate.
+    cand_df = tx.scan(candidates).drop("__ri")
 
     hit = (
         F.coalesce(_where_cond(where_n), F.lit(False))
@@ -3208,7 +3050,7 @@ def _delta_rewrite_where(
         r["__fp"] for r in matched.select("__fp").distinct().collect()
     }
     if not touched:
-        return state["version"], 0  # skipping kept a superset: no-op
+        return tx.version, 0  # skipping kept a superset: no-op
     rewrite_df = cand_df.filter(F.col("__fp").isin(*sorted(touched)))
     matched = rewrite_df.filter(hit)
     n_aff = matched.count()
@@ -3271,7 +3113,7 @@ def _delta_rewrite_where(
         if regen:
             post_df = post_df.drop(*[g for g, _, _ in regen])
         post_df = _delta_apply_generated(post_df, meta).select(*cols)
-        _delta_enforce_constraints(post_df, conf, meta)
+        _delta_enforce_constraints(post_df, tx.conf, meta)
         cdc_df = (
             matched.select(*cols)
             .withColumn("_change_type", F.lit("update_preimage"))
@@ -3284,47 +3126,11 @@ def _delta_rewrite_where(
             "set": json.dumps(dict(sorted(assigns.items()))),
         }
 
-    actions: list[dict] = []
-    ts = int(time.time() * 1000)
-    rel_touched = sorted(
-        p for p, ap in abs_of.items() if ap in touched
-    )
-    for rel in rel_touched:
-        add = state["files"][rel]
-        rm = {
-            "path": rel,
-            "deletionTimestamp": ts,
-            "dataChange": True,
-        }
-        if add.get("deletionVector"):
-            # Spec fidelity: the remove carries the DV descriptor the
-            # add held, so native readers retire the right logical
-            # file. The rewrite restages its survivors CLEAN.
-            rm["deletionVector"] = add["deletionVector"]
-        actions.append({"remove": rm})
-    staged_df = _delta_physical_batch(out_df, schema) if cm_on else out_df
-    cm_pcols = [phys[c] for c in pcols] if cm_on else pcols
-    actions.extend(
-        {"add": a} for a in _delta_stage_files(staged_df, table_path, cm_pcols)
-    )
-    if conf.get("delta.enableChangeDataFeed", "false").lower() == "true":
-        if cm_on:
-            from pyspark.sql.types import StringType, StructField
-
-            cdc_df = _delta_physical_batch(
-                cdc_df,
-                StructType(
-                    list(schema.fields)
-                    + [StructField("_change_type", StringType())]
-                ),
-            )
-        actions.extend(
-            {"cdc": c} for c in _delta_stage_cdc(cdc_df, table_path, cm_pcols)
-        )
-    version = _delta_commit(
-        table_path, state["version"] + 1, actions, operation, opp
-    )
-    return version, n_aff
+    # The rewrite restages the survivors of DV-carrying files CLEAN.
+    actions = [tx.remove(p) for p in sorted(candidates) if tx.abspath(p) in touched]
+    actions += tx.stage(out_df)
+    actions += tx.stage_cdc(cdc_df)
+    return tx.commit(actions, operation, opp), n_aff
 
 
 def delete_delta_where(
@@ -3387,13 +3193,13 @@ def restore_delta(table_path: str, version: int) -> int:
     vacuumed away (the restore would commit a state the scan cannot
     serve), on CDF tables (a restore without cdc capture would hole
     the feed), and under appendOnly (removes are forbidden). Returns
-    the committed version."""
-    cur = _delta_replay(table_path, None)
+    the committed version. Files diff on the logical-file key (path
+    and deletion vector), so a file that only gained a deletion vector
+    since ``version`` re-adds without it."""
+    tx = _delta_open(None, table_path, "overwrite")
     old = _delta_replay(table_path, int(version))
-    meta = cur["metaData"]
-    _delta_guard_writer(cur["protocol"], meta, "overwrite")
-    if cur["version"] == int(version):
-        return cur["version"]  # restoring to head: no-op
+    if tx.version == int(version):
+        return tx.version  # restoring to head: no-op
     missing = [
         p for p in old["files"]
         if not os.path.isfile(
@@ -3405,22 +3211,22 @@ def restore_delta(table_path: str, version: int) -> int:
             f"cannot restore to version {version}: {len(missing)} of its "
             f"data files were vacuumed (first: {missing[0]!r})"
         )
-    ts = int(time.time() * 1000)
-    actions: list[dict] = []
-    for p in sorted(set(cur["files"]) - set(old["files"])):
-        actions.append(
-            {"remove": {"path": p, "deletionTimestamp": ts, "dataChange": True}}
-        )
-    for p in sorted(set(old["files"]) - set(cur["files"])):
-        add = dict(old["files"][p])
-        add["dataChange"] = True
-        actions.append({"add": add})
+    cur_keys = {_delta_file_key(a) for a in tx.files.values()}
+    old_keys = {_delta_file_key(a) for a in old["files"].values()}
+    # Removes first: a path in both snapshots under another deletion
+    # vector retires and re-adds in this order.
+    actions = [
+        tx.remove(p) for p in sorted(tx.files)
+        if _delta_file_key(tx.files[p]) not in old_keys
+    ]
+    actions += [
+        {"add": {**old["files"][p], "dataChange": True}}
+        for p in sorted(old["files"])
+        if _delta_file_key(old["files"][p]) not in cur_keys
+    ]
     if not actions:
-        return cur["version"]  # same file set: no-op
-    return _delta_commit(
-        table_path, cur["version"] + 1, actions, "RESTORE",
-        {"version": int(version)},
-    )
+        return tx.version  # same file set: no-op
+    return tx.commit(actions, "RESTORE", {"version": int(version)})
 
 
 def _delta_layout_rewrite(
@@ -3437,67 +3243,32 @@ def _delta_layout_rewrite(
     file gets a tight min/max box on all clustered columns at once."""
     if target_bytes <= 0:
         raise ValueError("target_bytes must be positive")
-    state = _delta_replay(table_path, None)
-    meta = state["metaData"]
-    _delta_guard_writer(state["protocol"], meta, "merge")
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = list(meta.get("partitionColumns") or [])
-    ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
-    cm_on = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    ) in ("name", "id")
-    file_schema, read_names, phys, rsess = _delta_file_resolution(
-        spark, meta, schema, pcols
-    )
+    tx = _delta_open(spark, table_path, "merge")
     if zorder_by:
-        bad = [c for c in zorder_by if c in pcols]
+        bad = [c for c in zorder_by if c in tx.pcols]
         if bad:
             raise ValueError(
                 f"ZORDER BY columns {bad} are partition columns — "
                 "partition dirs already separate them"
             )
-    groups: dict[tuple, list[tuple[str, dict]]] = {}
-    for rel, add in state["files"].items():
+    groups: dict[tuple, list[str]] = {}
+    for rel, add in tx.files.items():
         if add.get("deletionVector"):
             continue  # debt files belong to compact_delta
         if not zorder_by and int(add.get("size", 0) or 0) >= target_bytes:
             continue
-        pv = add.get("partitionValues") or {}
-        key = tuple((c, pv.get(phys.get(c, c))) for c in pcols)
-        groups.setdefault(key, []).append((rel, add))
-    binnable = {k: v for k, v in groups.items() if len(v) >= 2}
+        pv = add["partitionValues"]
+        groups.setdefault(tuple(pv.get(tx.phys[c]) for c in tx.pcols), []).append(rel)
+    binnable = sorted(sorted(v) for v in groups.values() if len(v) >= 2)
     if not binnable:
         return None, {"removed": 0, "added": 0}
 
     actions: list[dict] = []
-    ts = int(time.time() * 1000)
-    n_removed = n_added = 0
-    cm_pcols = [phys[c] for c in pcols] if cm_on else pcols
-    for key, members in sorted(
-        binnable.items(),
-        key=lambda kv: [(c, v is not None, v or "") for c, v in kv[0]],
-    ):
-        paths = [
-            os.path.abspath(
-                os.path.join(table_path, urllib.parse.unquote(rel))
-            )
-            for rel, _a in members
-        ]
-        total = sum(int(a.get("size", 0) or 0) for _r, a in members)
+    n_added = 0
+    for members in binnable:
+        total = sum(int(tx.files[r].get("size", 0) or 0) for r in members)
         n_bins = max(1, -(-total // target_bytes))
-        df = rsess.read.schema(file_schema).parquet(*paths)
-        gsel = []
-        for f in schema.fields:
-            if f.name in pcols:
-                raw = dict(key)[f.name]
-                gsel.append(
-                    (F.lit(raw) if raw is not None else F.lit(None))
-                    .cast(ptypes[f.name])
-                    .alias(f.name)
-                )
-            else:
-                gsel.append(F.col(read_names[f.name]).alias(f.name))
-        scan = df.select(*gsel)
+        scan = tx.scan(members).select(*tx.cols)
         if zorder_by:
             from .zorder import zorder_value
 
@@ -3510,32 +3281,18 @@ def _delta_layout_rewrite(
             )
         else:
             out = scan.coalesce(int(n_bins))
-        staged = _delta_physical_batch(out, schema) if cm_on else out
-        for rel, _a in sorted(members):
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": ts,
-                        # A layout move changes no logical rows.
-                        "dataChange": False,
-                    }
-                }
-            )
-            n_removed += 1
-        for a in _delta_stage_files(staged, table_path, cm_pcols):
-            a["dataChange"] = False
-            actions.append({"add": a})
-            n_added += 1
+        # A layout move changes no logical rows.
+        actions += [tx.remove(r, data_change=False) for r in members]
+        adds = tx.stage(out, data_change=False)
+        actions += adds
+        n_added += len(adds)
     opp: dict = {"targetBytes": int(target_bytes)}
     if zorder_by:
         opp["zOrderBy"] = json.dumps(list(zorder_by))
     else:
         opp["binpack"] = True
-    version = _delta_commit(
-        table_path, state["version"] + 1, actions, "OPTIMIZE", opp
-    )
-    return version, {"removed": n_removed, "added": n_added}
+    n_removed = sum(len(m) for m in binnable)
+    return tx.commit(actions, "OPTIMIZE", opp), {"removed": n_removed, "added": n_added}
 
 
 def binpack_delta(
@@ -3701,16 +3458,11 @@ def truncate_delta(table_path: str) -> tuple[int, int | None]:
     feed (use ``DELETE FROM`` / a keyed MERGE, which capture) — as do
     appendOnly tables. Returns (committed version, removed logical
     row count — None when any file lacks numRecords stats)."""
-    state = _delta_replay(table_path, None)
-    meta = state["metaData"]
-    _delta_guard_writer(state["protocol"], meta, "overwrite")
-    if not state["files"]:
-        return state["version"], 0  # already empty: no-op, no commit
+    tx = _delta_open(None, table_path, "overwrite")
+    if not tx.files:
+        return tx.version, 0  # already empty: no-op, no commit
     n_rows: int | None = 0
-    ts = int(time.time() * 1000)
-    actions: list[dict] = []
-    for rel in sorted(state["files"]):
-        add = state["files"][rel]
+    for add in tx.files.values():
         if n_rows is not None:
             try:
                 nr = json.loads(add.get("stats") or "{}").get("numRecords")
@@ -3722,14 +3474,8 @@ def truncate_delta(table_path: str) -> tuple[int, int | None]:
                 if nr is not None
                 else None
             )
-        rm = {"path": rel, "deletionTimestamp": ts, "dataChange": True}
-        if add.get("deletionVector"):
-            rm["deletionVector"] = add["deletionVector"]
-        actions.append({"remove": rm})
-    version = _delta_commit(
-        table_path, state["version"] + 1, actions, "TRUNCATE", {}
-    )
-    return version, n_rows
+    actions = [tx.remove(rel) for rel in sorted(tx.files)]
+    return tx.commit(actions, "TRUNCATE", {}), n_rows
 
 
 def truncate_iceberg(table_path: str) -> tuple[int, int | None]:
@@ -3799,14 +3545,10 @@ def alter_delta_table(
     rename_columns = dict(rename_columns or {})
     if not (add_columns or drop_columns or rename_columns):
         raise ValueError("nothing to alter: pass add/drop/rename columns")
-    state = _delta_replay(table_path, None)
-    meta = state["metaData"]
-    _delta_guard_writer(state["protocol"], meta, "append")
-    conf = dict(meta.get("configuration") or {})
-    cm_on = conf.get("delta.columnMapping.mode", "none") in ("name", "id")
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = set(meta.get("partitionColumns") or [])
-    lower = {f.name.lower(): f.name for f in schema.fields}
+    tx = _delta_open(None, table_path, "append")
+    meta, conf, cm_on = tx.meta, dict(tx.conf), tx.cm_on
+    pcols = set(tx.pcols)
+    lower = {c.lower(): c for c in tx.cols}
     if (drop_columns or rename_columns) and not cm_on:
         raise NotImplementedError(
             "DROP/RENAME COLUMN on a Delta table requires column "
@@ -3814,7 +3556,7 @@ def alter_delta_table(
             "it physical parquet columns are bound to logical names "
             "and foreign readers would mis-resolve existing files"
         )
-    fields = [f.jsonValue() for f in schema.fields]
+    fields = [f.jsonValue() for f in tx.schema.fields]
     max_id = int(conf.get("delta.columnMapping.maxColumnId", 0) or 0)
     if (drop_columns or rename_columns) and cm_on:
         # Freeze IMPLICIT physical names before any rename/drop: a
@@ -3934,10 +3676,7 @@ def alter_delta_table(
         opp["drop"] = json.dumps(drop_columns)
     if rename_columns:
         opp["rename"] = json.dumps(rename_columns)
-    return _delta_commit(
-        table_path, state["version"] + 1, [{"metaData": new_meta}],
-        "ALTER TABLE", opp,
-    )
+    return tx.commit([{"metaData": new_meta}], "ALTER TABLE", opp)
 
 
 # -- Apache Hudi (copy-on-write): timeline read -----------------------------
@@ -9167,7 +8906,8 @@ def _ice_datafile_carry(dfr: dict) -> dict:
     schema: v1 records have no ``content`` and older writers omit the
     optional stats maps — re-serializing a sparse record through a
     required-int schema would crash the commit (r13, the
-    ``upgrade_iceberg_v1_to_v2`` path)."""
+    ``upgrade_iceberg_v1_to_v2`` path). A format-version 3 record keeps
+    its row-lineage ``first_row_id``."""
     return {
         "content": int(dfr.get("content") or 0),
         "file_path": dfr["file_path"],
@@ -9178,6 +8918,7 @@ def _ice_datafile_carry(dfr: dict) -> dict:
         "lower_bounds": dfr.get("lower_bounds"),
         "upper_bounds": dfr.get("upper_bounds"),
         "null_value_counts": dfr.get("null_value_counts"),
+        "first_row_id": dfr.get("first_row_id"),
     }
 
 
@@ -9215,6 +8956,20 @@ def _mlist_carry(rec: dict) -> dict:
         "existing_rows_count": count("existing_rows_count"),
         "deleted_rows_count": count("deleted_rows_count"),
     }
+
+
+def _mlist_live(rec: dict, table_path: str) -> bool:
+    """False for a manifest with no live (status 0 or 1) entry. A record
+    counting added or existing files is live; one counting neither is
+    read to make sure, because a record carried from a sparse (format
+    version 1 or foreign) one counts 0 for an absent count."""
+    from .avro_lite import read_avro_file
+
+    mlist = _mlist_carry(rec)
+    if mlist["added_files_count"] or mlist["existing_files_count"]:
+        return True
+    _s, entries = read_avro_file(_iceberg_local_path(rec["manifest_path"], table_path))
+    return any(e.get("status", 1) != 2 for e in entries)
 
 
 def _ice_data_manifest_meta(
@@ -9288,11 +9043,17 @@ class _IceTxn:
         snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
         sid = meta.get("current-snapshot-id")
         self.parent_id = sid if sid in snaps else None
-        self.mlist_records: list[dict] = []
+        recs: list[dict] = []
         if self.parent_id is not None:
-            _s, self.mlist_records = read_avro_file(
+            _s, recs = read_avro_file(
                 _iceberg_local_path(snaps[sid]["manifest-list"], table_path)
             )
+        # A manifest with no live entry holds only deletes an earlier
+        # snapshot recorded: the new snapshot drops it, as native
+        # Iceberg does.
+        live = [_mlist_live(r, table_path) for r in recs]
+        self.mlist_records = list(itertools.compress(recs, live))
+        self.dead_recs = [r for r, ok in zip(recs, live) if not ok]
         self.data_recs = [r for r in self.mlist_records if r.get("content", 0) == 0]
         self.delete_recs = [r for r in self.mlist_records if r.get("content", 0) != 0]
         self.snapshot_id = uuid.uuid4().int >> 65  # 63-bit positive long
@@ -12284,17 +12045,24 @@ def rewrite_iceberg_manifests(table_path: str) -> tuple[int | None, dict]:
     (new snapshot id or None when at most one data manifest per spec,
     {"merged": n_in, "created": n_out})."""
     tx = _ice_open(table_path, "rewrite_iceberg_manifests")
-    specs = [int(r.get("partition_spec_id") or 0) for r in tx.data_recs]
+    # The parent's manifests without a live entry count as merged: the
+    # rewrite drops them.
+    dead = [
+        int(r.get("partition_spec_id") or 0)
+        for r in tx.dead_recs
+        if r.get("content", 0) == 0
+    ]
+    specs = [int(r.get("partition_spec_id") or 0) for r in tx.data_recs] + dead
     if len(set(specs)) == len(specs):  # at most one data manifest per spec
         return None, {"merged": 0, "created": 0}
-    by_spec: dict[int, list[dict]] = {}
+    by_spec: dict[int, list[dict]] = {s: [] for s in specs}
     for mf in tx.live_manifests():
-        by_spec.setdefault(int(mf["rec"].get("partition_spec_id") or 0), []).append(mf)
+        by_spec[int(mf["rec"].get("partition_spec_id") or 0)].append(mf)
 
     new_mlist: list[dict] = []
     n_merged = n_created = 0
     for spec_id, mfs in sorted(by_spec.items()):
-        if len(mfs) < 2:
+        if len(mfs) + dead.count(spec_id) < 2:
             new_mlist.extend(_mlist_carry(mf["rec"]) for mf in mfs)
             continue
         merged: list[dict] = []
@@ -12320,9 +12088,10 @@ def rewrite_iceberg_manifests(table_path: str) -> tuple[int | None, dict]:
                         "data_file": _ice_datafile_carry(e["data_file"]),
                     }
                 )
-        n_merged += len(mfs)
-        new_mlist.append(tx.write_manifest(merged, 0, spec_id))
-        n_created += 1
+        n_merged += len(mfs) + dead.count(spec_id)
+        if merged:
+            new_mlist.append(tx.write_manifest(merged, 0, spec_id))
+            n_created += 1
     new_mlist += [_mlist_carry(r) for r in tx.delete_recs]
     new_sid = tx.commit(
         new_mlist,

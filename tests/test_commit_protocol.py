@@ -12,8 +12,10 @@ makes commits die at a step of that primitive and checks that
 - the staged temp files left behind match no log, metadata or timeline
   pattern.
 
-The Iceberg cases cover an append, a merge-on-read merge that adds a
-position-delete manifest, and the compaction that retires it. The
+The Delta cases cover an append, a merge, the compaction that purges
+deletion vectors and a predicate delete. The Iceberg cases cover an
+append, a merge-on-read merge that adds a position-delete manifest, and
+the compaction that retires it. The
 resolver tests at the end cover a hint left stale or empty by a writer
 that died between the metadata file and the hint.
 """
@@ -28,7 +30,9 @@ from automation_of_building_a_transactional_data_lake_spark.formats import atomi
 from automation_of_building_a_transactional_data_lake_spark.formats.interop import (
     _iceberg_current_metadata,
     alter_iceberg_table,
+    compact_delta,
     compact_iceberg,
+    delete_delta_where,
     merge_delta,
     merge_iceberg,
     read_delta,
@@ -187,6 +191,69 @@ def test_delta_append_and_merge_survive_commit_crashes(spark, tmp_path, monkeypa
     assert sorted(f for f in os.listdir(log) if _DELTA_ENTRY.fullmatch(f)) == [
         f"{v:020d}.json" for v in range(3)
     ]
+
+
+def _delta_state(spark, root):
+    """The rows readers see and the newest commit's operation."""
+    log = os.path.join(root, "_delta_log")
+    head = max(f for f in os.listdir(log) if _DELTA_ENTRY.fullmatch(f))
+    with open(os.path.join(log, head), encoding="utf-8") as f:
+        info = json.loads(f.read().splitlines()[-1])["commitInfo"]
+    return _rows(read_delta(spark, root)), info["operation"]
+
+
+def _delta_dv_table(spark, root):
+    """A deletion-vector table at version 1: a merge marked one row."""
+    write_delta(
+        _df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1), root,
+        configuration={"delta.enableDeletionVectors": "true"},
+    )
+    merge_delta(_df(spark, [(2, "B")]), root, key="id", strategy="dv")
+
+
+def _delta_next_commit_lands_at(spark, root, version, rows):
+    """An append after the crashes commits as log entry ``version``."""
+    write_delta(_df(spark, rows), root, mode="append")
+    log = os.path.join(root, "_delta_log")
+    assert sorted(f for f in os.listdir(log) if _DELTA_ENTRY.fullmatch(f)) == [
+        f"{v:020d}.json" for v in range(version + 1)
+    ]
+
+
+def test_delta_compact_survives_commit_crashes(spark, tmp_path, monkeypatch):
+    root = str(tmp_path / "delta")
+    _delta_dv_table(spark, root)
+    rows = [(1, "a"), (2, "B"), (3, "c")]
+    _crash_then_commit(
+        monkeypatch, root, _DELTA_ENTRY, lambda: compact_delta(spark, root),
+        lambda: _delta_state(spark, root),
+        old=(rows, "MERGE"),
+        new=(rows, "REORG"),
+    )
+    assert compact_delta(spark, root) is None  # no deletion vector left
+    _delta_next_commit_lands_at(spark, root, 3, [(4, "d")])
+    assert _rows(read_delta(spark, root)) == rows + [(4, "d")]
+
+
+def test_delta_delete_where_survives_commit_crashes(spark, tmp_path, monkeypatch):
+    root = str(tmp_path / "delta")
+    _delta_dv_table(spark, root)
+    _crash_then_commit(
+        monkeypatch, root, _DELTA_ENTRY,
+        lambda: delete_delta_where(spark, root, [("id", "=", 3)]),
+        lambda: _delta_state(spark, root),
+        old=([(1, "a"), (2, "B"), (3, "c")], "MERGE"),
+        new=([(1, "a"), (2, "B")], "DELETE"),
+    )
+    # Dying right after the entry is published: the delete is committed.
+    _crash(
+        monkeypatch, "after", _DELTA_ENTRY,
+        lambda: delete_delta_where(spark, root, [("id", "=", 1)]),
+    )
+    assert _delta_state(spark, root) == ([(2, "B")], "DELETE")
+    _check_tree(root)
+    _delta_next_commit_lands_at(spark, root, 4, [(4, "d")])
+    assert _rows(read_delta(spark, root)) == [(2, "B"), (4, "d")]
 
 
 def test_iceberg_append_and_alter_survive_commit_crashes(spark, tmp_path, monkeypatch):

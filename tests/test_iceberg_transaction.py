@@ -8,6 +8,8 @@ once on a tiny table and check, after each commit:
   ``min_sequence_number`` against the manifest it points to;
 - the header of every manifest the commit wrote: format version,
   partition spec id and content;
+- no manifest carried from an earlier snapshot lists only deleted
+  files;
 - on format-version 3, the snapshot's ``first-row-id`` and the table's
   ``next-row-id``;
 - ``read_iceberg`` against a pandas model of the table.
@@ -98,7 +100,9 @@ class _Table:
             ]
             assert r["min_sequence_number"] == min(seqs, default=r["sequence_number"])
             assert r["manifest_length"] == os.path.getsize(path)
-            if r["added_snapshot_id"] == snap["snapshot-id"]:
+            if r["added_snapshot_id"] != snap["snapshot-id"]:
+                assert r["added_files_count"] + r["existing_files_count"] > 0, r
+            else:
                 hdr = _header(path)
                 assert hdr["format-version"] == str(meta["format-version"]).encode()
                 assert int(hdr["partition-spec-id"]) == r["partition_spec_id"]
@@ -162,6 +166,11 @@ def test_every_v2_writer_keeps_snapshot_invariants(spark, tmp_path):
     t.model = t.model.iloc[0:0]
     t.upsert(rows)
     assert t.check()["summary"]["operation"] == "overwrite"
+    # The overwrite's manifest of deleted files is not carried on.
+    rows = [(50, "a50", 50)]
+    write_iceberg(t.df(rows), t.root, mode="append")
+    t.upsert(rows)
+    t.check()
 
     rows = [(1, "c1", 1), (20, "c20", 20)]
     merge_iceberg(t.df(rows), t.root, key="id", strategy="cow")
@@ -205,6 +214,12 @@ def test_every_v2_writer_keeps_snapshot_invariants(spark, tmp_path):
     t.model = t.model[t.model.id != 4]
     t.check()
 
+    # Manifests of deleted files only are no longer carried, so the
+    # second data manifest to merge comes from one more append.
+    rows = [(60, "a60", 60)]
+    write_iceberg(t.df(rows), t.root, mode="append")
+    t.upsert(rows)
+    t.check()
     _sid, stats = rewrite_iceberg_manifests(t.root)
     assert stats["merged"] >= 2 and stats["created"] == 1
     t.check()
@@ -242,6 +257,44 @@ def test_v3_writers_keep_row_lineage_and_manifest_headers(spark, tmp_path):
     _sid, stats = binpack_iceberg(spark, t.root)
     assert stats == {"removed": 2, "added": 1}
     t.check()
+
+    # Two files in one manifest, a deletion vector on the first: the
+    # compaction rewrites that manifest and the second file keeps its
+    # row lineage.
+    rows = [(i, f"v{i}", i) for i in range(20, 24)]
+    write_iceberg(
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), SCHEMA),
+        t.root, mode="append",
+    )
+    t.upsert(rows)
+    t.check(added_rows=4)
+    write_iceberg_deletion_vectors(
+        spark.createDataFrame([(20,)], "id long"), t.root, keys="id"
+    )
+    t.model = t.model[t.model.id != 20]
+    t.check()
+    lineage = _first_row_ids(t)
+    assert compact_iceberg(spark, t.root) is not None
+    t.check()
+    kept = {p: r for p, r in _first_row_ids(t).items() if p in lineage}
+    assert kept == {p: lineage[p] for p in kept}
+    assert [r for r in kept.values() if r is not None]
+
+
+def _first_row_ids(t: _Table) -> dict:
+    """{data file path: first_row_id} of the current snapshot's live
+    data files."""
+    out = {}
+    for r in read_avro_file(_iceberg_local_path(
+        next(s for s in t.meta["snapshots"]
+             if s["snapshot-id"] == t.meta["current-snapshot-id"])["manifest-list"],
+        t.root,
+    ))[1]:
+        if r["content"] == 0:
+            for e in read_avro_file(_iceberg_local_path(r["manifest_path"], t.root))[1]:
+                if e["status"] != 2:
+                    out[e["data_file"]["file_path"]] = e["data_file"]["first_row_id"]
+    return out
 
 
 def test_main_branch_ref_follows_every_commit(spark, tmp_path):
