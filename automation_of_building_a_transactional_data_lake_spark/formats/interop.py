@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from .atomic import create_file, replace_file
 
 _DELTA_LOG = "_delta_log"
@@ -819,7 +820,7 @@ def _delta_dv_pairs_frame(
     The returned paths + inline byte count feed _delete_side's
     broadcast byte gate."""
     rows = [(fp, json.dumps(dv)) for fp, dv in sorted(dv_by_file.items())]
-    desc = spark.createDataFrame(rows, "__fp string, __dv string")
+    desc = local_frame(spark, rows, "__fp string, __dv string")
     if len(rows) > 1:
         # Fan out to cluster parallelism (r11 verdict #7, the winnow
         # lesson): a many-file DV table should decode across every
@@ -1852,7 +1853,7 @@ def read_delta(
     clean = [a for a in adds if not a.get("deletionVector")]
     dvd = [a for a in adds if a.get("deletionVector")]
     if not clean and not dvd:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     mode = (meta.get("configuration") or {}).get("delta.columnMapping.mode", "none")
     unmapped = mode in ("none", "") and all(phys[c] == c for c in phys)
@@ -1926,13 +1927,11 @@ def read_delta(
                 F.col("_metadata.row_index").alias("__ri"),
             )
         )
-        del_df = spark.createDataFrame(
-            deleted, "__fp string, __ri long"
-        )
+        del_df = local_frame(spark, deleted, "__fp string, __ri long")
         df = df.join(F.broadcast(del_df), ["__fp", "__ri"], "left_anti")
         if pcols:
             lk_fields = ", ".join(f"__pv_{i} string" for i in range(len(pcols)))
-            lk = spark.createDataFrame(lookup, f"__fp string, {lk_fields}")
+            lk = local_frame(spark, lookup, f"__fp string, {lk_fields}")
             df = df.join(F.broadcast(lk), "__fp")
         cols = []
         for f in schema.fields:
@@ -2113,7 +2112,7 @@ def read_delta_changes(
     if out is None:
         empty = StructType(list(schema.fields))
         empty = empty.add("_change_type", "string").add("_commit_version", "long")
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     return _where_residual(out, where_n)
 
 
@@ -3972,8 +3971,8 @@ def _hudi_log_rows_frame(
         desc_rows.append(
             (os.path.abspath(latest[(pp, fid)][1]), json.dumps(paths), pp)
         )
-    desc = spark.createDataFrame(
-        desc_rows, "__fp string, __paths string, __pp string"
+    desc = local_frame(
+        spark, desc_rows, "__fp string, __paths string, __pp string"
     )
     if len(desc_rows) > 1:
         # Cluster-parallel decode (the r11 verdict #7 fan-out rule):
@@ -5297,14 +5296,15 @@ def _hudi_log_write(
     # to tombstone it (update.partition.path=true move semantics), and
     # deletes kill every location of the key. No O(matched keys)
     # driver collect — the map stays a frame.
-    fmap_base = spark.createDataFrame(
+    fmap_base = local_frame(
+        spark,
         [
             (os.path.abspath(p), fid)
             for (_pp, fid), (_ts, p) in sorted(latest.items())
         ],
         "__fp string, __fid string",
     )
-    scan = spark.read.parquet(*base_paths).select(
+    scan = spark.read.schema(base_schema).parquet(*base_paths).select(
         F.col("_hoodie_record_key").alias("__k"),
         F.coalesce(F.col("_hoodie_partition_path"), F.lit("")).alias("__pp"),
         _norm_file_path(F.col("_metadata.file_path")).alias("__fp"),
@@ -5406,8 +5406,8 @@ def _hudi_log_write(
                 if m and m.group("base") == base_instant:
                     ver = max(ver, int(m.group("ver")) + 1)
             gm_rows.append((pp, fid, base_instant, ver))
-        group_meta = spark.createDataFrame(
-            gm_rows, "__pp string, __fid string, __base string, __ver int"
+        group_meta = local_frame(
+            spark, gm_rows, "__pp string, __fid string, __base string, __ver int"
         )
         # Routed feeds the group plan and the group write — pin it
         # once (unpersisted in finally; the bound refusal below must
@@ -5599,8 +5599,8 @@ def compact_hudi(
         spark, slice_logs, latest, completed, fields, max_log_bytes
     )
     merged = _hudi_merge_log_frame(base, logdf)
-    fmap = spark.createDataFrame(
-        fid_rows, "__fp string, __mpp string, __hudi_fid string"
+    fmap = local_frame(
+        spark, fid_rows, "__fp string, __mpp string, __hudi_fid string"
     )
     business_cols = [
         f.name for f in fields if not f.name.startswith("_hoodie_")
@@ -5681,8 +5681,8 @@ def cluster_hudi(
         raise NotImplementedError(
             "clustering needs populated _hoodie_record_key meta columns"
         )
-    fmap = spark.createDataFrame(
-        fmap_rows, "__fp string, __mpp string, __bfid string, __nb int"
+    fmap = local_frame(
+        spark, fmap_rows, "__fp string, __mpp string, __bfid string, __nb int"
     )
     out = (
         df.join(F.broadcast(fmap), "__fp")
@@ -5828,8 +5828,8 @@ def zorder_hudi(
     # Map to the schema's actual casing so downstream F.col resolution
     # never depends on the caller's spelling.
     zorder_by = [by_lower[c.lower()] for c in zorder_by]
-    fmap = spark.createDataFrame(
-        fmap_rows, "__fp string, __mpp string, __bfid string"
+    fmap = local_frame(
+        spark, fmap_rows, "__fp string, __mpp string, __bfid string"
     )
     z = zorder_value(df, list(zorder_by), f"zorder_hudi({table_path})")
     # Contiguous RANGE bins over (partition path, z) via Spark's own
@@ -6234,19 +6234,13 @@ def write_hudi(
             f"{r['_hoodie_partition_path']}\x00{r['__hudi_fid']}"
             for r in affected_rows
         }
-        from pyspark.sql.types import StringType, StructField
-
-        affected = spark.createDataFrame(
+        affected = local_frame(
+            spark,
             [
                 (r["_hoodie_partition_path"], r["__hudi_fid"])
                 for r in affected_rows
             ],
-            StructType(
-                [
-                    StructField("_hoodie_partition_path", StringType()),
-                    StructField("__hudi_fid", StringType()),
-                ]
-            ),
+            "_hoodie_partition_path string, __hudi_fid string",
         )
         # `affected` is driver-built and bounded above — broadcast is
         # safe by construction here, unlike the key frames.
@@ -7658,8 +7652,8 @@ def _ice_avro_rows_frame(
         ]
         names += ["__fp", "__ri"]
     out_schema = StructType(out_fields)
-    desc = spark.createDataFrame(
-        [(os.path.abspath(p),) for p in sorted(paths)], "__p string"
+    desc = local_frame(
+        spark, [(os.path.abspath(p),) for p in sorted(paths)], "__p string"
     )
     if len(paths) > 1:
         par = max(spark.sparkContext.defaultParallelism, 1)
@@ -7981,7 +7975,7 @@ def _ice_scan_with_deletes(
             dv_bytes += sz
             for pos in _puffin.read_dv_blob(ppath, off, sz):
                 pairs.append((fp, pos))
-        dv_df = spark.createDataFrame(pairs, "__fp string, __ri long")
+        dv_df = local_frame(spark, pairs, "__fp string, __ri long")
         df = df.join(
             _delete_side(dv_df, [], extra_bytes=dv_bytes),
             ["__fp", "__ri"], "left_anti",
@@ -8149,7 +8143,7 @@ def read_iceberg(
         # when no declared schema exists to type the empty frame.
         empty_schema = _iceberg_table_schema(meta)
         if empty_schema is not None:
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         raise FileNotFoundError(
             f"Iceberg snapshot {sid} at {table_path} references no data "
             "files and the metadata carries no schema"
@@ -8958,6 +8952,24 @@ def _mlist_carry(rec: dict) -> dict:
     }
 
 
+def _mlist_counts(entries: list[dict]) -> dict:
+    """A manifest-list record's added/existing/deleted file and row
+    counts, tallied from its manifest's ``entries`` by status (0
+    existing, 1 added, 2 deleted)."""
+    files, rows = [0, 0, 0], [0, 0, 0]
+    for e in entries:
+        files[e["status"]] += 1
+        rows[e["status"]] += int(e["data_file"].get("record_count") or 0)
+    return {
+        "added_files_count": files[1],
+        "existing_files_count": files[0],
+        "deleted_files_count": files[2],
+        "added_rows_count": rows[1],
+        "existing_rows_count": rows[0],
+        "deleted_rows_count": rows[2],
+    }
+
+
 def _mlist_live(rec: dict, table_path: str) -> bool:
     """False for a manifest with no live (status 0 or 1) entry. A record
     counting added or existing files is live; one counting neither is
@@ -9162,10 +9174,6 @@ class _IceTxn:
                 b"deletes" if content else b"data", spec_id, self.fv,
             ),
         )
-        files, rows = [0, 0, 0], [0, 0, 0]  # by status: existing, added, deleted
-        for e in entries:
-            files[e["status"]] += 1
-            rows[e["status"]] += int(e["data_file"].get("record_count") or 0)
         return {
             "manifest_path": f"file://{mpath}",
             "manifest_length": os.path.getsize(mpath),
@@ -9175,12 +9183,7 @@ class _IceTxn:
                 (int(e["sequence_number"]) for e in entries), default=self.seq
             ),
             "added_snapshot_id": self.snapshot_id,
-            "added_files_count": files[1],
-            "existing_files_count": files[0],
-            "deleted_files_count": files[2],
-            "added_rows_count": rows[1],
-            "existing_rows_count": rows[0],
-            "deleted_rows_count": rows[2],
+            **_mlist_counts(entries),
         }
 
     def commit(self, new_mlist: list[dict], summary: dict, added_rows: int = 0) -> int:
@@ -10067,8 +10070,10 @@ def upgrade_iceberg_v1_to_v2(table_path: str) -> int:
       filled; ``last-sequence-number`` starts at 0;
     - snapshots carrying the v1 INLINE ``manifests`` list get a real
       manifest-list Avro file written (v2 requires ``manifest-list``),
-      every record at sequence number 0."""
-    from .avro_lite import write_avro_file
+      every record at sequence number 0 with its file and row counts
+      tallied from the manifest's entries (a native planner skips a
+      data manifest that counts no added and no existing files)."""
+    from .avro_lite import read_avro_file, write_avro_file
 
     chosen, meta = _iceberg_current_metadata_named(table_path)
     fv = int(meta.get("format-version", 1))
@@ -10124,17 +10129,21 @@ def upgrade_iceberg_v1_to_v2(table_path: str) -> int:
             recs = []
             for mp in s["manifests"]:
                 local = _iceberg_local_path(mp, table_path)
+                found = os.path.isfile(local)
                 recs.append(
                     _mlist_carry(
                         {
                             "manifest_path": mp,
                             "manifest_length": (
-                                os.path.getsize(local)
-                                if os.path.isfile(local)
-                                else 0
+                                os.path.getsize(local) if found else 0
                             ),
                             "added_snapshot_id": s.get("snapshot-id", 0),
                             "sequence_number": 0,
+                            **(
+                                _mlist_counts(read_avro_file(local)[1])
+                                if found
+                                else {}
+                            ),
                         }
                     )
                 )
@@ -10774,7 +10783,7 @@ def read_iceberg_incremental(
                 (_iceberg_local_path(dfr["file_path"], table_path), 0, fmt)
             )
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # ONE per-format scan implementation engine-wide (review finding,
     # r16): the delete-aware scanner with no deletes IS the plain scan.
     out = _ice_scan_with_deletes(spark, {}, table_path, files, [], [], schema)
@@ -10900,7 +10909,7 @@ def read_iceberg_changelog(
     if to_sid is None or to_sid == -1:
         # The native 'no current snapshot' convention: an empty table
         # has an empty changelog.
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         return (
             empty.withColumn("_change_type", F.lit("insert"))
             .withColumn("_commit_snapshot_id", F.lit(0).cast("long"))
@@ -11021,7 +11030,7 @@ def read_iceberg_changelog(
             cur_files, cur_pos, cur_eq, cur_dvs
         )
     if not parts:
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         return _stamp(empty, "insert", to_sid or 0, 0).filter(F.lit(False))
     out = parts[0]
     for d in parts[1:]:
@@ -11780,7 +11789,7 @@ def compact_iceberg(spark: SparkSession, table_path: str) -> int | None:
                     (fp, int(pos)) for pos in _puffin.read_dv_blob(pp, off, sz)
                 )
             pair_frames.append(
-                spark.createDataFrame(pairs, "__fp string, __ri long")
+                local_frame(spark, pairs, "__fp string, __ri long")
             )
         pos_pairs = pair_frames[0]
         for f_ in pair_frames[1:]:

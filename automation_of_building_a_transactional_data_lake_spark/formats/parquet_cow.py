@@ -84,6 +84,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..spec import TableSpec
 from .atomic import replace_file
 from .transforms import parse_transform
@@ -1696,8 +1697,8 @@ class ParquetCowTable:
                 if part and part not in {c for c, _t in cols}:
                     ptype = self._read_meta().get("partition_type") or "string"
                     cols.append((part, ptype))
-                return self.spark.createDataFrame(
-                    [], ", ".join(f"{c} {t}" for c, t in cols)
+                return local_frame(
+                    self.spark, [], ", ".join(f"{c} {t}" for c, t in cols)
                 )
         if not part:
             return reader.parquet(cur.path)
@@ -2203,11 +2204,12 @@ class ParquetCowTable:
                 pval = seg.split("=", 1)[1] if seg and "=" in seg else None
                 n = stats.get(rel, {}).get("_rows")
                 rows.append((rel, pval, os.path.getsize(f), n))
-            return self.spark.createDataFrame(
-                rows, "path string, partition string, bytes long, rows long"
+            return local_frame(
+                self.spark, rows, "path string, partition string, bytes long, rows long"
             )
         if kind == "history":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(h["version"], h["n_files"], h["is_current"]) for h in self.history()],
                 "version long, n_files long, is_current boolean",
             )
@@ -2218,8 +2220,8 @@ class ParquetCowTable:
                 ("branch", name, b["head"], b["base"])
                 for name, b in sorted(refs["branches"].items())
             ]
-            return self.spark.createDataFrame(
-                rows, "kind string, name string, version long, base long"
+            return local_frame(
+                self.spark, rows, "kind string, name string, version long, base long"
             )
         raise ValueError(f"unknown metadata table {kind!r}; choose files|history|refs")
 

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import dedupe_latest
+from ..session import local_frame
 from ..spec import TableSpec
 from .atomic import replace_file
 from .parquet_cow import ConcurrentWriteError, ConstraintViolation, MergeError
@@ -532,7 +533,7 @@ class ParquetMorTable:
         dvs = snap.get("dvs") or {}
         if dvs:
             dv_rows = [(f, i) for f, ps in dvs.items() for i in ps]
-            dv_df = self.spark.createDataFrame(dv_rows, "__f string, __i long")
+            dv_df = local_frame(self.spark, dv_rows, "__f string, __i long")
             base = (
                 base.withColumn(
                     "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
@@ -707,11 +708,12 @@ class ParquetMorTable:
                                 pq.ParquetFile(fpath).metadata.num_rows,
                             )
                         )
-            return self.spark.createDataFrame(
-                rows, "path string, role string, bytes long, rows long"
+            return local_frame(
+                self.spark, rows, "path string, role string, bytes long, rows long"
             )
         if kind == "history":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (h["version"], h["base"], h["n_deltas"], h["is_current"])
                     for h in self.history()
@@ -719,7 +721,8 @@ class ParquetMorTable:
                 "version long, base string, n_deltas long, is_current boolean",
             )
         if kind == "refs":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("tag", name, v) for name, v in sorted(self.tags().items())],
                 "kind string, name string, version long",
             )

@@ -22,8 +22,10 @@ Scale notes (100 TB / 1000-executor design):
 from __future__ import annotations
 
 import os
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 DEFAULT_APP_NAME = "transactional_data_lake_spark"
 
@@ -121,3 +123,36 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A driver-built side table (file maps, deletion-vector pairs,
+    log-slice descriptors, metadata listings) as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, ddl)`` pickles the rows into an RDD,
+    so every action over the frame runs ``defaultParallelism``
+    Python-worker tasks just to read it back (~0.3-0.4 s for a 4-row
+    frame on 4 cores). Built from a ``pyarrow.Table`` the rows ship to
+    the JVM once and the frame plans as a ``LocalRelation``: no tasks
+    to scan it, exact size statistics for the broadcast planner, and
+    an empty frame that the optimizer prunes. ``schema`` is a DDL
+    string or a ``StructType``; naive timestamps mean local time, as
+    in ``createDataFrame``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in struct.fields]
+    for i, f in enumerate(struct.fields):
+        if isinstance(f.dataType, TimestampType):
+            cols[i] = [
+                v.astimezone(timezone.utc) if v is not None and v.tzinfo is None else v
+                for v in cols[i]
+            ]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, arrow.types)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .formats.parquet_cow import ParquetCowTable
+from .session import local_frame
 
 
 @dataclass
@@ -782,14 +783,14 @@ class LakeSQL:
                 if n is None:
                     return None
                 alias = m.group("alias") or "count(1)"
-                return self.spark.createDataFrame([(n,)], f"`{alias}` long")
+                return local_frame(self.spark, [(n,)], f"`{alias}` long")
             if not hasattr(tbl, "row_count"):
                 return None
             n = tbl.row_count(
                 version=int(m.group("ver")) if m.group("ver") else None
             )
             alias = m.group("alias") or "count(1)"
-            return self.spark.createDataFrame([(n,)], f"`{alias}` long")
+            return local_frame(self.spark, [(n,)], f"`{alias}` long")
         m = re.match(
             r"\s*SELECT\s+COUNT\s*\(\s*\*\s*\)\s*(?:AS\s+(?P<alias>\w+)\s+)?"
             r"FROM\s+(?P<fmt>delta|iceberg|hudi)\.`(?P<path>[^`]+)`"
@@ -837,7 +838,7 @@ class LakeSQL:
         if n is None:
             return None  # metadata cannot answer exactly: real plan
         alias = m.group("alias") or "count(1)"
-        return self.spark.createDataFrame([(n,)], f"`{alias}` long")
+        return local_frame(self.spark, [(n,)], f"`{alias}` long")
 
     # -- DDL / maintenance statements --------------------------------------
 
@@ -1106,7 +1107,7 @@ class LakeSQL:
             # isolation and time travel apply (the change feed sees an
             # overwrite op, its documented abort signal).
             spec, tbl = self._resolve_ident(m.group("t"))
-            empty = self.spark.createDataFrame([], tbl.read().schema)
+            empty = local_frame(self.spark, [], tbl.read().schema)
             tbl.overwrite(empty)
             return {"table": spec.qualified_name, "action": "truncate"}
 
@@ -1534,8 +1535,9 @@ class LakeSQL:
         )
         if m:
             names = self.catalog.list_tables(m.group("db"))
-            return self.spark.createDataFrame(
-                [(m.group("db"), n) for n in names], "database string, table string"
+            return local_frame(
+                self.spark, [(m.group("db"), n) for n in names],
+                "database string, table string",
             )
 
         m = re.match(
@@ -1556,7 +1558,8 @@ class LakeSQL:
                 )
                 for sn in meta.get("snapshots", [])
             ]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 rows,
                 "snapshot_id long, timestamp long, operation string, "
                 "is_current boolean",
@@ -1591,8 +1594,8 @@ class LakeSQL:
                 except (OSError, ValueError):
                     op = None
                 rows.append((fm.group(1), fm.group(2), op))
-            return self.spark.createDataFrame(
-                rows, "instant string, action string, operation string"
+            return local_frame(
+                self.spark, rows, "instant string, action string, operation string"
             )
 
         m = re.match(
@@ -1620,8 +1623,8 @@ class LakeSQL:
                             ts = ci.get("timestamp")
                             break
                 rows.append((v, ts, op))
-            return self.spark.createDataFrame(
-                rows, "version int, timestamp long, operation string"
+            return local_frame(
+                self.spark, rows, "version int, timestamp long, operation string"
             )
 
         m = re.match(
@@ -1733,7 +1736,8 @@ class LakeSQL:
                     interop.hudi_row_count(p),
                     head,
                 )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [detail],
                 "format string, location string, "
                 "partition_columns array<string>, num_files long, "
@@ -1745,7 +1749,8 @@ class LakeSQL:
         )
         if m:
             _spec, tbl = self._resolve_ident(m.group("t"))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (h["version"], h["n_files"], h["is_current"])
                     for h in tbl.history()
@@ -1824,7 +1829,8 @@ class LakeSQL:
                 [spec.partition_key] if spec.partition_key else [],
                 len(files), size, n_rows, str(cur.version),
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [detail],
                 "format string, location string, "
                 "partition_columns array<string>, num_files long, "
@@ -1839,8 +1845,10 @@ class LakeSQL:
                 (n, t, n == spec.primary_key, n == spec.partition_key)
                 for n, t in df.dtypes
             ]
-            return self.spark.createDataFrame(
-                rows, "col_name string, data_type string, is_primary_key boolean, "
+            return local_frame(
+                self.spark,
+                rows,
+                "col_name string, data_type string, is_primary_key boolean, "
                 "is_partition boolean"
             )
 
@@ -2250,7 +2258,7 @@ class LakeSQL:
             (k, v if isinstance(v, str) else json.dumps(v))
             for k, v in meta.items()
         ]
-        return self.spark.createDataFrame(rows, "key string, value string")
+        return local_frame(self.spark, rows, "key string, value string")
 
     # -- MERGE INTO --------------------------------------------------------
 

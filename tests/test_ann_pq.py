@@ -1,7 +1,9 @@
 """Product-quantization ANN gates: deterministic layout-independent
 codes, byte-exact compression, an ADC recall floor against exact brute
-force on the real embeddings, and exact top-k under re-rank."""
+force on the real embeddings, exact top-k under re-rank, the vectorized
+Lloyd update, and the plan shape of the exact re-rank."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,6 +11,8 @@ from automation_of_building_a_transactional_data_lake_spark.operators.ann_ivf im
     recall_at_k,
 )
 from automation_of_building_a_transactional_data_lake_spark.operators.ann_pq import (
+    _lloyd,
+    _normalize,
     encode_pq,
     pq_topk,
     train_pq,
@@ -29,6 +33,19 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def codebooks(spark, emb):
     return train_pq(emb, m=8)
+
+
+def _formatted_plan(df) -> str:
+    jvm = df.sparkSession._jvm
+    return df._jdf.queryExecution().explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
+def _emb(spark):
+    return spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
 
 
 def _exact_topk(emb, qvec, k=10):
@@ -83,3 +100,56 @@ def test_pq_rerank_recovers_exact_topk(spark, emb, codebooks):
 def test_pq_rejects_indivisible_dim(spark, emb):
     with pytest.raises(ValueError, match="not divisible"):
         train_pq(emb, m=7)
+
+
+def test_lloyd_update_is_member_mean_and_deterministic():
+    """The vectorized centroid update (bincount sums / counts) must
+    agree with the definitional per-cluster member mean to float
+    accumulation tolerance, keep empty-cluster centroids, and be
+    bit-deterministic across calls."""
+    rng = np.random.RandomState(7)
+    x = _normalize(rng.randn(500, 8))
+    got = _lloyd(x, 32, iters=1)
+    # Recompute one definitional Lloyd step from the same seeds.
+    seeds = x[:32].copy()
+    d2 = (
+        (x * x).sum(axis=1, keepdims=True)
+        - 2.0 * (x @ seeds.T)
+        + (seeds * seeds).sum(axis=1)[None, :]
+    )
+    assign = d2.argmin(axis=1)
+    for c in range(32):
+        members = x[assign == c]
+        if len(members):
+            assert np.allclose(got[c], members.mean(axis=0), atol=1e-12), c
+        else:
+            assert np.array_equal(got[c], seeds[c]), c
+    assert np.array_equal(got, _lloyd(x, 32, iters=1))  # deterministic
+
+
+def test_pq_topk_all_is_exact_and_plans_topk(spark):
+    """rerank='all' (the exactness-gate setting) must (a) return the
+    same rows as a rerank bound equal to the corpus size, (b) plan the
+    exact re-rank as TakeOrderedAndProject — never the INT_MAX limit's
+    single-partition global sort (rerank=(1<<31)-1 exceeded
+    topKSortFallbackThreshold and planned Exchange SinglePartition +
+    Sort + GlobalLimit over the whole corpus), and (c) keep the ADC
+    stage in the plan (the gate proves the encode/ADC machinery;
+    column pruning would otherwise reduce the gate to brute force)."""
+    emb = _emb(spark)
+    qvec = list(emb.filter(F.col("vec_id") == 0).select("embedding").first()[0])
+    cand = emb.filter(F.col("vec_id") != 0)
+    books = train_pq(cand, m=8)
+    enc = encode_pq(cand, books)
+
+    got_all = pq_topk(enc, books, qvec, k=10, rerank="all").collect()
+    got_n = pq_topk(enc, books, qvec, k=10, rerank=cand.count()).collect()
+    assert got_all == got_n
+
+    plan = _formatted_plan(pq_topk(enc, books, qvec, k=10, rerank="all"))
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "GlobalLimit" not in plan, plan
+    assert "ArrowEvalPython" in plan, plan  # ADC stage not pruned
+
+    with pytest.raises(ValueError, match="rerank"):
+        pq_topk(enc, books, qvec, k=10, rerank="bogus")

@@ -24,6 +24,7 @@ import pandas as pd
 from automation_of_building_a_transactional_data_lake_spark.formats.avro_lite import (
     _decode,
     read_avro_file,
+    write_avro_file,
 )
 from automation_of_building_a_transactional_data_lake_spark.formats.interop import (
     _iceberg_current_metadata,
@@ -39,6 +40,7 @@ from automation_of_building_a_transactional_data_lake_spark.formats.interop impo
     rollback_iceberg,
     truncate_iceberg,
     update_iceberg_where,
+    upgrade_iceberg_v1_to_v2,
     upgrade_iceberg_v2_to_v3,
     write_iceberg,
     write_iceberg_deletion_vectors,
@@ -147,6 +149,103 @@ def test_mlist_carry_reads_v1_names_and_fills_sparse_records():
         "deleted_files_count": 0, "added_rows_count": 0,
         "existing_rows_count": 0, "deleted_rows_count": 0,
     }
+
+
+def test_v1_upgrade_counts_each_manifests_entries(spark, tmp_path):
+    """Upgrading a hand-built format-version 1 table (inline
+    ``manifests`` list) writes manifest-list records whose file and row
+    counts are their manifest's entry tallies by status: a native
+    planner skips a data manifest counting no added and no existing
+    files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "v1")
+    mdir, ddir = os.path.join(root, "metadata"), os.path.join(root, "data")
+    os.makedirs(mdir)
+    os.makedirs(ddir)
+    entry_schema = {
+        "type": "record", "name": "manifest_entry",
+        "fields": [
+            {"name": "status", "type": "int"},
+            {"name": "snapshot_id", "type": ["null", "long"]},
+            {"name": "data_file", "type": {
+                "type": "record", "name": "r2",
+                "fields": [
+                    {"name": "file_path", "type": "string"},
+                    {"name": "file_format", "type": "string"},
+                    {"name": "partition", "type": {
+                        "type": "record", "name": "r102", "fields": []}},
+                    {"name": "record_count", "type": "long"},
+                    {"name": "file_size_in_bytes", "type": "long"},
+                ]}},
+        ],
+    }
+
+    def entry(status, name, ids):
+        path = os.path.join(ddir, name)
+        if status != 2:  # a deleted entry's file may be gone
+            pq.write_table(pa.table({
+                "id": pa.array(ids, pa.int64()),
+                "val": [f"v{i}" for i in ids],
+                "n": pa.array(ids, pa.int64()),
+            }), path)
+        return {
+            "status": status, "snapshot_id": 7,
+            "data_file": {
+                "file_path": "file://" + path, "file_format": "PARQUET",
+                "partition": {}, "record_count": len(ids),
+                "file_size_in_bytes": (
+                    os.path.getsize(path) if status != 2 else 1
+                ),
+            },
+        }
+
+    manifests = {
+        "m-a.avro": [entry(1, "a1.parquet", [1, 2]),
+                     entry(0, "a2.parquet", [3, 4, 5])],
+        "m-b.avro": [entry(2, "b0.parquet", [6, 7, 8, 9]),
+                     entry(1, "b1.parquet", [10])],
+    }
+    for name, entries in manifests.items():
+        write_avro_file(os.path.join(mdir, name), entry_schema, entries)
+    meta = {
+        "format-version": 1,
+        "location": "file://" + root,
+        "last-column-id": 3,
+        "schema": {"type": "struct", "fields": [
+            {"id": 1, "name": "id", "required": False, "type": "long"},
+            {"id": 2, "name": "val", "required": False, "type": "string"},
+            {"id": 3, "name": "n", "required": False, "type": "long"},
+        ]},
+        "partition-spec": [],
+        "current-snapshot-id": 7,
+        "snapshots": [{
+            "snapshot-id": 7, "timestamp-ms": 1700000000000,
+            "manifests": ["file://" + os.path.join(mdir, n) for n in manifests],
+            "summary": {"operation": "append"},
+        }],
+    }
+    with open(os.path.join(mdir, "v1.metadata.json"), "w", encoding="utf-8") as f:
+        json.dump(meta, f)
+    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
+        f.write("1")
+
+    assert upgrade_iceberg_v1_to_v2(root) == 2
+    meta = _iceberg_current_metadata(root)
+    (snap,) = meta["snapshots"]
+    _s, mlist = read_avro_file(_iceberg_local_path(snap["manifest-list"], root))
+    assert len(mlist) == len(manifests)
+    for r in mlist:
+        entries = manifests[os.path.basename(r["manifest_path"])]
+        for status, kind in ((0, "existing"), (1, "added"), (2, "deleted")):
+            es = [e for e in entries if e["status"] == status]
+            assert r[f"{kind}_files_count"] == len(es), (kind, r)
+            assert r[f"{kind}_rows_count"] == sum(
+                e["data_file"]["record_count"] for e in es
+            ), (kind, r)
+    got = read_iceberg(spark, root).select(*COLS).toPandas()
+    assert sorted(got.id) == [1, 2, 3, 4, 5, 10]
 
 
 def test_every_v2_writer_keeps_snapshot_invariants(spark, tmp_path):
